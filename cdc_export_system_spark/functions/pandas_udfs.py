@@ -256,13 +256,14 @@ def mg_heavy_hitters(items: DataFrame, capacity: int, support: float) -> DataFra
 
     partials = items.mapInPandas(mg_partials, schema="item string, cnt bigint")
     # The merged counter table (<= capacity+1 rows) is consumed twice
-    # (total + report) and the static plan shows 2 MapInPandas nodes,
-    # but both consumers hang off ONE exchange and Spark's ReuseExchange
-    # rule deduplicates the pass at runtime — an eager localCheckpoint
-    # here (tried in r11) only added a materialization job and measured
-    # a driver-confirmed -15% with no saved execution. Left on the
-    # optimizer: the parity suite pins the result, so a ReuseExchange
-    # regression would surface as a count mismatch, not silence.
+    # (total + report). Both consumers do NOT share one exchange: the
+    # optimizer pushes the isNull / isNotNull splits below it, so the
+    # executed plan holds two exchanges over two events scans and the
+    # MG pass runs twice. An eager localCheckpoint here (tried in r11)
+    # still measured -15% in the bench. The parity suite cannot
+    # see this either way — re-executing the deterministic subtree gives
+    # equal counts; only the executed plan's FileScan count (2 now, 1 if
+    # shared) and the bench wall-clock show it.
     agg = partials.groupBy("item").agg(F.sum("cnt").alias("est_count"))
     total = agg.where(F.col("item").isNull()).select(F.col("est_count").alias("n"))
     merged = agg.where(F.col("item").isNotNull())

@@ -5,47 +5,69 @@ one row per consumer_id (unique), ``last_exported_at`` is the high-water
 ``updated_at`` of the last successful export, ``updated_at`` bumps on
 every upsert.
 
-Spark has no transactional MERGE without a table format, so durability is
-a snapshot-versioned directory with an atomically swapped CURRENT pointer
-(the same commit idea as a Structured Streaming checkpoint's offset log):
+The table is tiny (one row per consumer), so every commit writes the
+whole of it as one small JSON file, and the pointer chain IS the table:
 
     state_dir/
-      versions/<uuid>/part-*.parquet   # immutable full snapshots
-      CURRENT                          # text file naming the live version
+      CURRENT.<20-digit seq>   # {consumer_id: [last_exported_at_us, updated_at_us]}
 
-The pointer is a link(2)-elected CAS CHAIN (``CURRENT.<seq>``), not a
-single replaced file: a writer reads the latest sequence, builds the
-merged snapshot, and publishes by hard-linking the fully-written
-pointer to ``CURRENT.<seq+1>`` — losing the election (EEXIST) means a
+Timestamps are epoch microseconds converted by Spark's own
+``TimestampType().toInternal/fromInternal``, so a value reads back
+exactly as a Spark round trip would return it, in any process timezone.
+Reads and commits are plain file IO in the calling process, with no
+Spark job — the way a Structured Streaming checkpoint keeps its offset
+and commit logs.
+
+Commits are a link(2)-elected CAS chain: a writer reads the head
+``CURRENT.<s>``, merges its row, writes and fsyncs a temp file and
+hard-links it to ``CURRENT.<s+1>``. Losing the election (EEXIST) means a
 concurrent commit advanced the chain, so the writer RE-READS and
-re-merges before retrying. That makes concurrent upserts of DIFFERENT
-consumers serialize without loss, matching the reference's per-row DB
+re-merges before retrying. Concurrent upserts of DIFFERENT consumers
+therefore serialize without loss, matching the reference's per-row DB
 transactions (jobs.py:31-60; two consumers exporting simultaneously is
-the reference's normal background-task mode). The earlier
-unconditional ``os.replace`` pointer swap was atomic per commit but
-lost the read-merge-write race outright — a 4-thread stress probe
-dropped 3 of 4 consumers' rows (tests/test_cdc_exports.py::
-test_concurrent_consumer_upserts_all_survive pins the fix). Readers
-take the highest sequence; snapshots stay immutable, so a reader on an
-older pointer still sees a consistent table. The state table is tiny
-(one row per consumer), so full-snapshot-per-commit is the right trade
-at any scale; it also gives free time travel for debugging.
+the reference's normal background-task mode —
+tests/test_cdc_exports.py::test_concurrent_consumer_upserts_all_survive
+pins it). Readers take the highest sequence. ``_gc`` keeps the newest 20
+pointers plus any younger than 60 s, which is also the time-travel
+window for debugging.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import shutil
+import time
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import TimestampType
 
-from cdc_export_system_spark.io.atomic import HardLinksUnsupported, link_publish
+from cdc_export_system_spark.io.atomic import link_publish
 from cdc_export_system_spark.schemas import WATERMARKS_SCHEMA
 
 _CURRENT = "CURRENT"
-_VERSIONS = "versions"
+_TS = TimestampType()
+
+# consumer_id -> [last_exported_at_us, updated_at_us]
+Table = dict[str, list[int]]
+
+
+def _parse(text: str, path: str) -> Table:
+    """The JSON table of one pointer file. Anything else — a pre-JSON
+    pointer naming a snapshot version, an empty or truncated file —
+    raises: reading it as "no watermark" would make incremental and
+    delta exports silently export nothing."""
+    try:
+        table = json.loads(text)
+    except ValueError:
+        table = None
+    if isinstance(table, dict) and all(
+        isinstance(v, list) and len(v) == 2 and all(type(x) is int for x in v)
+        for v in table.values()
+    ):
+        return table
+    raise ValueError(f"watermark pointer {path!r} does not hold a JSON watermark table")
 
 
 class WatermarkStore:
@@ -54,7 +76,7 @@ class WatermarkStore:
     def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
         self.state_dir = state_dir
-        os.makedirs(os.path.join(state_dir, _VERSIONS), exist_ok=True)
+        os.makedirs(state_dir, exist_ok=True)
 
     # -- read path -------------------------------------------------------
 
@@ -62,68 +84,52 @@ class WatermarkStore:
         """(seq, pointer-file) entries of the CAS chain, ascending."""
         out = []
         for name in os.listdir(self.state_dir):
-            if name.startswith(_CURRENT + ".") and not name.endswith(".tmp"):
+            if name.startswith(_CURRENT + "."):
                 try:
                     out.append((int(name.rsplit(".", 1)[1]), name))
                 except ValueError:
                     continue
         return sorted(out)
 
-    def _head(self) -> tuple[int, str | None]:
-        """(latest seq, live snapshot version) — (0, None) when empty.
-        Falls back to a legacy single CURRENT file at seq 0.
+    def _head(self) -> tuple[int, Table]:
+        """(latest seq, its table) — (0, {}) when the chain is empty.
 
         A pointer listed by _chain() can vanish before open() when a
         concurrent committer's _gc prunes the chain tail between our
         listdir and read — that always means a NEWER head exists, so
         the read retries from a fresh listing instead of surfacing
-        FileNotFoundError to the caller (the 5-writer race the round-9
-        advice flagged)."""
-        saw_chain = False
+        FileNotFoundError to the caller."""
         for _ in range(50):
             chain = self._chain()
             if not chain:
-                break
-            saw_chain = True
+                return 0, {}
             seq, name = chain[-1]
+            path = os.path.join(self.state_dir, name)
             try:
-                with open(os.path.join(self.state_dir, name)) as f:
-                    return seq, f.read().strip() or None
+                with open(path) as f:
+                    return seq, _parse(f.read(), path)
             except FileNotFoundError:
                 continue  # pruned under us: a newer pointer exists
-        if saw_chain:  # unreachable unless _gc's never-prune-head breaks
-            raise RuntimeError(
-                f"watermark pointer chain at {self.state_dir!r} kept "
-                "vanishing across 50 fresh listings"
-            )
-        try:
-            with open(os.path.join(self.state_dir, _CURRENT)) as f:
-                return 0, f.read().strip() or None
-        except FileNotFoundError:
-            return 0, None
-
-    def _current_version(self) -> str | None:
-        return self._head()[1]
+        # unreachable unless _gc's never-prune-head breaks
+        raise RuntimeError(
+            f"watermark pointer chain at {self.state_dir!r} kept "
+            "vanishing across 50 fresh listings"
+        )
 
     def snapshot(self) -> DataFrame:
         """The live watermark table (empty DataFrame when uninitialized)."""
-        version = self._current_version()
-        if version is None:
-            return self.spark.createDataFrame([], WATERMARKS_SCHEMA)
-        path = os.path.join(self.state_dir, _VERSIONS, version)
-        return self.spark.read.parquet(path)
+        rows = [
+            (c, _TS.fromInternal(wm), _TS.fromInternal(up))
+            for c, (wm, up) in sorted(self._head()[1].items())
+        ]
+        return self.spark.createDataFrame(rows, WATERMARKS_SCHEMA)
 
     def get(self, consumer_id: str) -> datetime | None:
         """Point lookup (reference watermark.py:7-9). Returns None when the
         consumer has never completed an export — the caller decides the
         no-watermark policy (exports.py:110-113: export nothing)."""
-        row = (
-            self.snapshot()
-            .filter(F.col("consumer_id") == consumer_id)
-            .select("last_exported_at")
-            .first()
-        )
-        return None if row is None else row["last_exported_at"]
+        row = self._head()[1].get(consumer_id)
+        return None if row is None else _TS.fromInternal(row[0])
 
     # -- write path ------------------------------------------------------
 
@@ -136,108 +142,61 @@ class WatermarkStore:
         """Insert-or-update one consumer row (reference watermark.py:11-26)
         through the CAS chain: read head -> merge -> publish seq+1 via
         link election; on losing the election, RE-READ and re-merge so a
-        concurrent commit for another consumer is never overwritten."""
-        import time as _time
+        concurrent commit for another consumer is never overwritten.
 
+        A won link is not enough on its own: _gc may have pruned slot
+        seq+1 while this writer stalled on head seq, and the link then
+        re-creates it BELOW the live head, where no reader looks. So the
+        upsert returns only once the live head holds its row, and
+        otherwise retries from a fresh head."""
         now = datetime.now(timezone.utc).replace(tzinfo=None)
-        new_row = self.spark.createDataFrame(
-            [Row(consumer_id=consumer_id, last_exported_at=last_exported_at, updated_at=now)],
-            WATERMARKS_SCHEMA,
-        )
-        last_err: Exception | None = None
+        row = [_TS.toInternal(last_exported_at), _TS.toInternal(now)]
         for attempt in range(max_retries):
-            seq, _live = self._head()
-            merged = (
-                self.snapshot()
-                .filter(F.col("consumer_id") != consumer_id)
-                .unionByName(new_row)
-            )
-            try:
-                if self._commit(merged, expected_seq=seq):
-                    return
-            except HardLinksUnsupported:
-                # Deterministic environment fault (link(2) unsupported):
-                # retrying cannot succeed and a 'lost N elections'
-                # message would mislead — fail fast, matching
-                # io.atomic's documented intent.
-                raise
-            except Exception as exc:  # noqa: BLE001
-                # The merge source snapshot is read lazily inside
-                # _commit's write job; under heavy concurrency _gc can
-                # vacuum it mid-write (Spark surfaces a missing-file
-                # read error). The snapshot dirs are immutable and the
-                # commit is elect-or-lose, so retrying from a FRESH
-                # head is always safe; genuine errors re-raise after
-                # the retry budget.
-                last_err = exc
-            _time.sleep(0.01 * (attempt % 5 + 1))
+            seq, table = self._head()
+            table[consumer_id] = row
+            if (
+                self._commit(table, expected_seq=seq)
+                and self._head()[1].get(consumer_id) == row
+            ):
+                return
+            time.sleep(0.01 * (attempt % 5 + 1))
         raise RuntimeError(
             f"watermark upsert for {consumer_id!r} lost {max_retries} "
             "commit elections"
-        ) from last_err
+        )
 
-    def _commit(self, df: DataFrame, expected_seq: int) -> bool:
-        """Write an immutable snapshot and try to publish it as
-        CURRENT.<expected_seq+1>. Returns False if a concurrent commit
-        won that sequence (caller re-reads and retries)."""
-        version = uuid.uuid4().hex
-        path = os.path.join(self.state_dir, _VERSIONS, version)
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-        tmp_pointer = os.path.join(self.state_dir, f".{_CURRENT}.{version}.tmp")
-        with open(tmp_pointer, "w") as f:
-            f.write(version)
+    def _commit(self, table: Table, expected_seq: int) -> bool:
+        """Try to publish ``table`` as CURRENT.<expected_seq+1>. Returns
+        False if a concurrent commit won that sequence (caller re-reads
+        and retries). link_publish raises HardLinksUnsupported — a
+        deterministic environment fault — straight out of the retry
+        loop rather than as a misleading 'lost N elections'."""
+        tmp = os.path.join(self.state_dir, f".{_CURRENT}.{uuid.uuid4().hex}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(table, f, separators=(",", ":"), sort_keys=True)
             f.flush()
             os.fsync(f.fileno())
         target = os.path.join(self.state_dir, f"{_CURRENT}.{expected_seq + 1:020d}")
         try:
-            won = link_publish(tmp_pointer, target)
+            won = link_publish(tmp, target)
         finally:
             try:
-                os.unlink(tmp_pointer)
+                os.unlink(tmp)
             except OSError:
                 pass
-        if not won:
-            shutil.rmtree(path, ignore_errors=True)  # orphan snapshot
-            return False
-        # the commit is durably published at this point — GC hiccups
-        # (e.g. a concurrent _gc deleting a dir mid-scan) must never
-        # turn a WON election into an apparent failure that the caller
-        # would redundantly retry
-        try:
-            self._gc(keep=version)
-        except OSError:
-            pass
-        return True
+        if won:
+            self._gc()
+        return won
 
-    def _gc(self, keep: str, retain: int = 20, min_age_s: float = 60.0) -> None:
-        """Drop stale snapshots (never the live one) and prune the
-        pointer chain's tail (never its head). Two horizons guard the
-        concurrent-reader window the round-9 advice flagged: keep the
-        newest ``retain`` entries AND anything younger than
-        ``min_age_s`` — a snapshot that was head a moment ago (some
-        reader or slow writer may still be mid-Spark-read of it) stays
-        on disk even if many commits just buried it. Entries are a few
-        KiB, so the larger horizon is free."""
-        import time as _time
-
-        cutoff = _time.time() - min_age_s
-        vdir = os.path.join(self.state_dir, _VERSIONS)
-        # stat everything up front and drop entries a concurrent _gc
-        # deleted between listdir and stat — getmtime as a sort key
-        # would raise FileNotFoundError out of a WON commit otherwise
-        stamped = []
-        for v in os.listdir(vdir):
-            p = os.path.join(vdir, v)
-            try:
-                stamped.append((os.path.getmtime(p), p))
-            except OSError:
-                continue  # vanished under us (concurrent _gc)
-        stamped.sort(reverse=True)
-        for mtime, stale in stamped[retain:]:
-            if mtime < cutoff and os.path.basename(stale) != keep:
-                shutil.rmtree(stale, ignore_errors=True)
-        chain = self._chain()
-        for _seq, name in chain[:-max(retain, 1)]:
+    def _gc(self, retain: int = 20, min_age_s: float = 60.0) -> None:
+        """Prune the pointer chain's tail, never its head. Two horizons:
+        keep the newest ``retain`` pointers AND any younger than
+        ``min_age_s``, so a pointer that was head a moment ago stays on
+        disk even if many commits just buried it. A pointer vanishing
+        under a concurrent _gc is skipped: GC must never turn a WON
+        commit into an apparent failure."""
+        cutoff = time.time() - min_age_s
+        for _seq, name in self._chain()[:-max(retain, 1)]:
             p = os.path.join(self.state_dir, name)
             try:
                 if os.path.getmtime(p) < cutoff:

@@ -29,17 +29,13 @@ _SLOW_FILES = {
 }
 _SLOW_TESTS = {
     "test_no_decimal_or_interval_in_any_final_schema",  # builds all 499 queries (364 s)
-    "test_concurrent_consumer_upserts_all_survive",
     "test_scd2_apply_batch_converges_for_any_split",
     "test_incremental_is_strictly_greater_and_live_only",
     "test_stream_stream_join_matches_batch",
     "test_stream_dedup_watermark_drops_cross_batch_redelivery",
     "test_listener_emits_lifecycle_events",
     "test_watermark_drops_late_rows",
-    "test_watermark_upsert_inserts_then_updates",
-    "test_gc_never_prunes_young_snapshots",
     "test_delta_classifies_all_three_operations",
-    "test_watermark_multiple_consumers_isolated",
     "test_lttb_exact_survives_hot_user_beyond_int64",
     "test_cached_view_queries_survive_per_query_repoisoning",
     "test_substring_spans_and_scrub_match_brute_force",

@@ -181,6 +181,17 @@ def test_watermark_upsert_inserts_then_updates(store):
     assert store.snapshot().filter(F.col("consumer_id") == "w").count() == 1
 
 
+def test_watermark_round_trips_microseconds_like_spark(spark, store):
+    """The JSON table stores epoch microseconds through Spark's own
+    TimestampType conversion, so get() and snapshot() return exactly
+    what a Spark round trip of the same value returns."""
+    t = datetime(2026, 1, 15, 12, 30, 15, 123457)
+    store.upsert("u", t)
+    via_spark = spark.createDataFrame([(t,)], "t timestamp").collect()[0]["t"]
+    assert store.get("u") == via_spark == t
+    assert store.snapshot().collect()[0]["last_exported_at"] == t
+
+
 def test_watermark_multiple_consumers_isolated(store):
     t1 = datetime(2026, 1, 1), datetime(2026, 1, 2)
     store.upsert("a", t1[0])
@@ -239,23 +250,22 @@ def test_forget_users_purge_and_audit_partition_the_table(spark):
 
 
 def test_concurrent_consumer_upserts_all_survive(spark, tmp_path):
-    """REAL write-write races on the watermark store: four threads each
-    advance their OWN consumer's watermark five times concurrently.
-    The reference runs exports as concurrent background tasks against
+    """REAL write-write races on the watermark store: eight threads (more
+    than the host's cores) each advance their OWN consumer's watermark
+    five times concurrently, with a shortened switch interval. The
+    reference runs exports as concurrent background tasks against
     per-row DB transactions, so every consumer's final watermark must
     survive; the store's original read-merge-replace commit lost 3 of
     4 consumers outright (whole-table last-writer-wins) — the CAS
     pointer chain (link-elected CURRENT.<seq>, re-read on lost
     election) pins the fix."""
+    import sys
     import threading
-    from datetime import datetime, timedelta
-
-    from cdc_export_system_spark.state.watermark import WatermarkStore
 
     d = str(tmp_path / "wm-race")
     store = WatermarkStore(spark, d)
     base = datetime(2024, 1, 1)
-    n_threads, n_upserts = 4, 5
+    n_threads, n_upserts = 8, 5
 
     def writer(tid: int) -> None:
         s = WatermarkStore(spark, d)
@@ -265,10 +275,16 @@ def test_concurrent_consumer_upserts_all_survive(spark, tmp_path):
     threads = [
         threading.Thread(target=writer, args=(t,)) for t in range(n_threads)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
 
     rows = {
         r["consumer_id"]: r["last_exported_at"]
@@ -301,41 +317,89 @@ def test_head_retries_past_pruned_pointer(store):
 
     WatermarkStore._chain = stale_then_real
     try:
-        seq, version = store._head()
+        seq, table = store._head()
     finally:
         WatermarkStore._chain = orig
     assert calls["n"] >= 2  # retried from a fresh listing
-    assert (seq, version) == (real_chain[-1][0], version)
-    assert version is not None
+    assert seq == real_chain[-1][0]
+    assert "c1" in table
     assert store.get("c1") == NOW
 
 
-def test_gc_never_prunes_young_snapshots(store):
-    """The GC horizon is count+age: entries younger than min_age_s
-    survive even when many commits bury them, so a slow concurrent
-    reader/writer still sees its recently-read snapshot on disk."""
-    for i in range(8):
-        store.upsert("c", NOW + timedelta(minutes=i))
-    vdir = os.path.join(store.state_dir, "versions")
-    # all 8 snapshots are seconds old -> none may have been GC'd
-    assert len(os.listdir(vdir)) == 8
-    assert len(store._chain()) == 8
-    # but an OLD buried snapshot does get collected once past the age
-    # horizon (retain still keeps the newest 20; use retain=2 to probe)
-    old = [os.path.join(vdir, v) for v in os.listdir(vdir)]
-    for p in old:
-        os.utime(p, (1, 1))
+def _age(store):
+    """Backdate every pointer past _gc's 60 s age horizon."""
     for _seq, name in store._chain():
         os.utime(os.path.join(store.state_dir, name), (1, 1))
-    live = store._current_version()
-    store._gc(keep=live, retain=2, min_age_s=60.0)
-    # newest 2 by mtime, plus the live version is NEVER deleted even
-    # when an ambiguous mtime sort puts it outside the retain window
-    assert len(os.listdir(vdir)) <= 3
-    assert live in os.listdir(vdir)
-    assert len(store._chain()) == 2
-    # the live head survived
+
+
+def test_gc_never_prunes_young_snapshots(store):
+    """The GC horizon is count+age: pointers (each a full snapshot of
+    the table) younger than min_age_s survive even when many commits
+    bury them, so a slow concurrent reader still finds the head it
+    listed; old buried pointers are pruned, the head never is."""
+    for i in range(8):
+        store.upsert("c", NOW + timedelta(minutes=i))
+    store._gc(retain=2)
+    # all 8 pointers are seconds old -> none may have been pruned
+    assert [s for s, _ in store._chain()] == list(range(1, 9))
+    _age(store)
+    store._gc(retain=2)
+    assert [s for s, _ in store._chain()] == [7, 8]
+    store._gc(retain=0)  # the head survives even a zero retain
+    assert [s for s, _ in store._chain()] == [8]
     assert store.get("c") == NOW + timedelta(minutes=7)
+    # nothing but the pointer chain lives in the state directory
+    assert sorted(os.listdir(store.state_dir)) == ["CURRENT.00000000000000000008"]
+
+
+def test_upsert_from_stale_head_is_not_lost(store, monkeypatch):
+    """A writer that read head s and stalled while _gc pruned slot s+1
+    wins its link to s+1 BELOW the live head, where no reader looks.
+    That commit must count as lost: the upsert re-reads and re-merges
+    instead of reporting an invisible update as success."""
+    store.upsert("c", NOW)
+    stale = store._head()  # what the stalled writer read (seq 1)
+    store.upsert("c", NOW + timedelta(minutes=1))
+    store.upsert("c", NOW + timedelta(minutes=2))
+    _age(store)
+    store._gc(retain=1)  # prunes slots 1 and 2 under the stalled writer
+    assert [s for s, _ in store._chain()] == [3]
+
+    real_head = WatermarkStore._head
+    reads = {"n": 0}
+
+    def stalled_then_real(self):
+        reads["n"] += 1
+        if reads["n"] == 1:
+            return stale[0], dict(stale[1])
+        return real_head(self)
+
+    monkeypatch.setattr(WatermarkStore, "_head", stalled_then_real)
+    store.upsert("d", NOW)
+    monkeypatch.undo()
+    assert store.get("d") == NOW
+    assert store.get("c") == NOW + timedelta(minutes=2)
+    assert store._chain()[-1][0] == 4  # the retry landed on top of 3
+
+
+@pytest.mark.parametrize(
+    "payload",
+    ["3f2a9c0e5b7d4e1f8a6b2c9d0e1f2a3b", "", '{"c": [1700000000000000',
+     '{"c": "2026-01-01"}'],
+    ids=["version_id", "empty", "truncated", "not_micros"],
+)
+def test_malformed_pointer_fails_loudly(store, payload):
+    """A pointer that does not hold the JSON table (a pre-JSON pointer
+    naming a snapshot version, an empty or truncated file) must raise a
+    ValueError naming the file — never read as "no watermark", which
+    would make incremental and delta exports silently export nothing."""
+    name = "CURRENT.00000000000000000001"
+    with open(os.path.join(store.state_dir, name), "w") as f:
+        f.write(payload)
+    for read in (lambda: store.get("c"), store.snapshot,
+                 lambda: store.upsert("c", NOW)):
+        with pytest.raises(ValueError, match=name):
+            read()
 
 
 def test_watermark_commit_descriptive_error_without_hardlinks(

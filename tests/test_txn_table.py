@@ -621,3 +621,52 @@ def test_changes_replication_tracks_every_version(spark, tmp_path):
         got = {(r["k"], r["v"]) for r in replica.read(version=rv).collect()}
         want = {(r["k"], r["v"]) for r in src.read(version=v).collect()}
         assert got == want, f"replica diverged at source v{v}"
+
+
+def test_footer_max_falls_back_on_corrupt_footer(spark, tmp_path):
+    """A corrupt or truncated source footer makes pyarrow raise
+    ArrowInvalid (a ValueError); the footer fast path must answer None
+    so max(o_orderkey) falls back to the Spark scan, not crash."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdc_export_system_spark.io.txn_queries import _orders_max_key, _source_max_int
+
+    good = str(tmp_path / "good.parquet")
+    pq.write_table(pa.table({"o_orderkey": pa.array([3, 9, 4], pa.int64())}), good)
+    assert _source_max_int(str(tmp_path), "good", "o_orderkey") == 9
+    with open(good, "rb") as f:
+        raw = f.read()
+    with open(tmp_path / "orders.parquet", "wb") as f:
+        f.write(raw[: len(raw) // 2])  # footer and magic cut off
+    assert _source_max_int(str(tmp_path), "orders", "o_orderkey") is None
+    orders = spark.read.parquet(good)
+    assert _orders_max_key(spark, str(tmp_path), orders) == 9
+
+
+def test_footer_max_requires_integer_logical_type(spark, tmp_path):
+    """DATE and int-backed DECIMAL columns ride INT32/INT64 physical
+    storage, but their footer statistics are a date and a Decimal, not
+    the integer max: only plain or INT-annotated columns take the fast
+    path."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from cdc_export_system_spark.io.txn_queries import _source_max_int
+
+    out = str(tmp_path / "spark_out")
+    # Spark stores DECIMAL(p<=9) as INT32 and DECIMAL(p<=18) as INT64
+    spark.sql(
+        "SELECT DATE'2020-01-01' AS d, CAST(12.34 AS DECIMAL(9,2)) AS dec32,"
+        " CAST(12.34 AS DECIMAL(18,2)) AS dec64, CAST(7 AS INT) AS i"
+    ).coalesce(1).write.parquet(out)
+    path = str(tmp_path / "t.parquet")
+    shutil.copy(glob.glob(os.path.join(out, "part-*.parquet"))[0], path)
+    md = pq.read_metadata(path)
+    assert [md.schema.column(i).physical_type for i in range(4)] == [
+        "INT32", "INT32", "INT64", "INT32"]
+    for col in ("d", "dec32", "dec64"):
+        assert _source_max_int(str(tmp_path), "t", col) is None, col
+    assert _source_max_int(str(tmp_path), "t", "i") == 7
