@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from cdc_export_system_spark.io.csv_sink import write_users_csv
 from cdc_export_system_spark.schemas import DELTA_EXPORT_COLUMNS, EXPORT_COLUMNS
@@ -39,28 +39,28 @@ def classify_operation() -> Column:
     )
 
 
-def _finish(
-    df: DataFrame, filepath: str, columns: list[str], single_file: bool
+def export_csv(
+    df: DataFrame, filepath: str, columns: list[str]
 ) -> tuple[int, datetime | None]:
-    """Write the batch and compute its max(updated_at) in one pass.
+    """Write the batch through the sink; returns (rows, max(updated_at)).
 
     The reference computes the watermark driver-side over fully
-    materialized rows (exports.py:92 — O(result) RAM); here the CSV write
-    and a one-row agg both run in-engine. Empty batch: no file, None.
+    materialized rows (exports.py:92 — O(result) RAM); here an
+    Observation on the batch reads max(updated_at) off the sink's own
+    write job, so the export is that one write and nothing else. Empty
+    batch: no file, (0, None).
     """
-    new_wm_row = df.agg(F.max("updated_at").alias("m")).first()
-    if new_wm_row["m"] is None:
+    wm = Observation()
+    n = write_users_csv(df.observe(wm, F.max("updated_at").alias("m")), filepath, columns)
+    if n == 0:
         return 0, None  # empty => no file, no advance (exports.py:87-88)
-    n = write_users_csv(df, filepath, columns, single_file=single_file)
-    return n, new_wm_row["m"]
+    return n, wm.get["m"]
 
 
-def run_full_export(
-    users: DataFrame, filepath: str, single_file: bool = True
-) -> tuple[int, datetime | None]:
+def run_full_export(users: DataFrame, filepath: str) -> tuple[int, datetime | None]:
     """Full snapshot of live rows (exports.py:70-95)."""
     live = users.filter(~F.col("is_deleted")).select(EXPORT_COLUMNS)
-    return _finish(live, filepath, EXPORT_COLUMNS, single_file)
+    return export_csv(live, filepath, EXPORT_COLUMNS)
 
 
 def run_incremental_export(
@@ -68,7 +68,6 @@ def run_incremental_export(
     store: WatermarkStore,
     consumer_id: str,
     filepath: str,
-    single_file: bool = True,
 ) -> tuple[int, datetime | None]:
     """Live rows strictly after the consumer's watermark (exports.py:98-135)."""
     wm = store.get(consumer_id)
@@ -79,7 +78,7 @@ def run_incremental_export(
         users.filter((F.col("updated_at") > F.lit(wm)) & (~F.col("is_deleted")))
         .select(EXPORT_COLUMNS)
     )
-    return _finish(batch, filepath, EXPORT_COLUMNS, single_file)
+    return export_csv(batch, filepath, EXPORT_COLUMNS)
 
 
 def run_delta_export(
@@ -87,7 +86,6 @@ def run_delta_export(
     store: WatermarkStore,
     consumer_id: str,
     filepath: str,
-    single_file: bool = True,
 ) -> tuple[int, datetime | None]:
     """Changelog rows (deletes included) after the watermark, with the
     operation classification (exports.py:138-171)."""
@@ -99,4 +97,4 @@ def run_delta_export(
         .withColumn("operation", classify_operation())
         .select(DELTA_EXPORT_COLUMNS)
     )
-    return _finish(batch, filepath, DELTA_EXPORT_COLUMNS, single_file)
+    return export_csv(batch, filepath, DELTA_EXPORT_COLUMNS)

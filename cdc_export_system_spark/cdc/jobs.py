@@ -58,7 +58,6 @@ def start_export_job(
     export_type: str,
     consumer_id: str,
     output_dir: str = "output",
-    single_file: bool = True,
     job_id: str | None = None,
     filename: str | None = None,
 ) -> dict[str, Any]:
@@ -84,15 +83,11 @@ def start_export_job(
     t0 = time.monotonic()
     try:
         if export_type == "full":
-            n, new_wm = _exports.run_full_export(users, filepath, single_file)
+            n, new_wm = _exports.run_full_export(users, filepath)
         elif export_type == "incremental":
-            n, new_wm = _exports.run_incremental_export(
-                users, store, consumer_id, filepath, single_file
-            )
+            n, new_wm = _exports.run_incremental_export(users, store, consumer_id, filepath)
         else:
-            n, new_wm = _exports.run_delta_export(
-                users, store, consumer_id, filepath, single_file
-            )
+            n, new_wm = _exports.run_delta_export(users, store, consumer_id, filepath)
         # State commit strictly after a successful, non-empty sink commit
         # (wm_advance_rule: jobs.py:31-58 + exports.py:87,127,163).
         if n > 0 and new_wm is not None:

@@ -9,16 +9,26 @@ Contract (reference app/services/exports.py:20-67):
 * booleans as Python ``True`` / ``False`` strings (exports.py:54)
 * rows ordered by ``updated_at`` ascending (exports.py:83,123,159)
 * zero rows => **no file at all** (exports.py:87-88,127-128,163-164)
+* quoting as the reference's ``csv`` module writes it (RFC 4180): a
+  field holding a quote, a comma or a line break is quoted and its
+  quotes are doubled (Spark's default escape is a backslash, which
+  ``csv.reader`` cannot read back), and leading/trailing spaces are kept
+  (Spark trims them on write by default)
 
 The serialization runs JVM-side (date_format/when inside codegen); Python
 never touches row data. The write commits via temp-dir + atomic rename,
 which is *stronger* than the reference (it can leave a CSV behind on a
 failed transaction, exports.py:90 vs jobs.py:42 — documented divergence).
+The file is the reference's one CSV, so its last stage is one task; a
+partitioned bulk extract is ``io/parquet_sink.py``'s job.
 
-Scale note: ``single_file=True`` reproduces the reference's one-file
-contract via a final coalesce(1) — correct for operational exports. For
-100 TB extracts pass ``single_file=False``: every task writes its own
-part file in parallel and the commit renames the whole directory.
+The row count is an ``Observation`` on the write job itself, not a read
+of the written file (a quoted line break would count as a second row).
+It sits *above* the sort: the sort's range partitioning first runs a
+sampling job over its input, so a count observed below the sort reads
+every row twice. A caller observing ``max`` on the frame it passes in
+gets its watermark from the same write job (``max`` is not changed by
+the second read).
 """
 
 from __future__ import annotations
@@ -28,12 +38,9 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from cdc_export_system_spark.functions.scalars import iso_utc
-
-_BOOL_COLS = ("is_deleted",)
-_TS_COLS = ("created_at", "updated_at")
 
 
 def _serialize(col_name: str, dtype: str) -> Column:
@@ -49,39 +56,33 @@ def write_users_csv(
     df: DataFrame,
     filepath: str,
     columns: list[str],
-    order_by: str = "updated_at",
-    single_file: bool = True,
+    order_by: str | list[str] = "updated_at",
 ) -> int:
-    """Write an export CSV; returns rows written. No file when 0 rows."""
+    """Write an export CSV in one Spark write; returns rows written. No
+    file when 0 rows."""
     dtypes = dict(df.dtypes)
-    out = df.orderBy(order_by).select([_serialize(c, dtypes[c]) for c in columns])
-
+    rows = Observation()
+    out = (
+        df.orderBy(order_by)
+        .observe(rows, F.count(F.lit(1)).alias("n"))
+        .select([_serialize(c, dtypes[c]) for c in columns])
+    )
     tmp_dir = f"{filepath}.__tmp__{uuid.uuid4().hex}"
     try:
-        writer = (out.coalesce(1) if single_file else out).write.option("header", True).option(
-            "emptyValue", ""
+        (
+            out.coalesce(1)
+            .write.option("header", True)
+            .option("emptyValue", "")
+            .option("escape", '"')
+            .option("ignoreLeadingWhiteSpace", False)
+            .option("ignoreTrailingWhiteSpace", False)
+            .csv(tmp_dir)
         )
-        writer.csv(tmp_dir)
-        parts = sorted(glob.glob(os.path.join(tmp_dir, "part-*.csv")))
-        # Row count from the committed files' line counts (header per part).
-        n_rows = 0
-        for p in parts:
-            with open(p, "rb") as f:
-                n_rows += sum(1 for _ in f) - 1
+        n_rows = rows.get["n"]
         if n_rows == 0:
             return 0  # empty export => no file (exports.py:87-88)
-        os.makedirs(os.path.dirname(filepath) or ".", exist_ok=True)
-        if single_file:
-            os.replace(parts[0], filepath)
-        else:
-            final_dir = filepath
-            staged = f"{final_dir}.__swap__{uuid.uuid4().hex}"
-            os.makedirs(staged)
-            for i, p in enumerate(parts):
-                os.replace(p, os.path.join(staged, f"part-{i:05d}.csv"))
-            if os.path.exists(final_dir):
-                shutil.rmtree(final_dir)
-            os.replace(staged, final_dir)
+        (part,) = glob.glob(os.path.join(tmp_dir, "part-*.csv"))
+        os.replace(part, filepath)
         return n_rows
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)

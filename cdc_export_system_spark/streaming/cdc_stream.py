@@ -24,8 +24,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_export_system_spark.cdc.exports import classify_operation
-from cdc_export_system_spark.io.csv_sink import write_users_csv
+from cdc_export_system_spark.cdc.exports import classify_operation, export_csv
 from cdc_export_system_spark.schemas import DELTA_EXPORT_COLUMNS, EXPORT_COLUMNS, USERS_SCHEMA
 from cdc_export_system_spark.state.watermark import WatermarkStore
 
@@ -33,6 +32,43 @@ from cdc_export_system_spark.state.watermark import WatermarkStore
 def users_change_stream(spark: SparkSession, changes_dir: str) -> DataFrame:
     """The users change feed as a stream (declared schema, never inferred)."""
     return spark.readStream.schema(USERS_SCHEMA).parquet(changes_dir)
+
+
+def _export_stream(
+    spark: SparkSession,
+    changes_dir: str,
+    store: WatermarkStore,
+    consumer_id: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    export_type: str,
+    project: Callable[[DataFrame], DataFrame],
+) -> list[dict[str, Any]]:
+    """Drain all available changes, each micro-batch through the batch
+    export path (``cdc.exports.export_csv``: one sink write that also
+    yields the batch's max(updated_at)); the watermark advances only
+    after a non-empty write. Returns the per-batch job summaries."""
+    results: list[dict[str, Any]] = []
+
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        frame = project(batch_df)
+        path = os.path.join(output_dir, f"{export_type}_{consumer_id}_epoch{epoch_id}.csv")
+        n, new_wm = export_csv(frame, path, frame.columns)
+        if n == 0:
+            results.append({"epoch": epoch_id, "rowsExported": 0})
+            return  # empty batch: no file, no advance (exports.py:127-128)
+        store.upsert(consumer_id, new_wm)
+        results.append({"epoch": epoch_id, "rowsExported": n, "file": path})
+
+    q = (
+        users_change_stream(spark, changes_dir)
+        .writeStream.foreachBatch(_process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return results
 
 
 def run_incremental_export_stream(
@@ -47,31 +83,12 @@ def run_incremental_export_stream(
 
     Each micro-batch applies the batch incremental semantics (live rows
     only) and lands in its own CSV; the checkpoint is the offset log, the
-    WatermarkStore mirrors the batch-mode observable state. Returns the
-    per-batch job summaries.
+    WatermarkStore mirrors the batch-mode observable state.
     """
-    results: list[dict[str, Any]] = []
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        live = batch_df.filter(~F.col("is_deleted")).select(EXPORT_COLUMNS)
-        new_wm = live.agg(F.max("updated_at")).first()[0]
-        if new_wm is None:
-            results.append({"epoch": epoch_id, "rowsExported": 0})
-            return  # empty batch: no file, no advance (exports.py:127-128)
-        path = os.path.join(output_dir, f"incremental_{consumer_id}_epoch{epoch_id}.csv")
-        n = write_users_csv(live, path, EXPORT_COLUMNS)
-        store.upsert(consumer_id, new_wm)
-        results.append({"epoch": epoch_id, "rowsExported": n, "file": path})
-
-    q = (
-        users_change_stream(spark, changes_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _export_stream(
+        spark, changes_dir, store, consumer_id, output_dir, checkpoint_dir, "incremental",
+        lambda b: b.filter(~F.col("is_deleted")).select(EXPORT_COLUMNS),
     )
-    q.awaitTermination()
-    return results
 
 
 def run_delta_export_stream(
@@ -84,30 +101,10 @@ def run_delta_export_stream(
 ) -> list[dict[str, Any]]:
     """Streaming delta export: deletes included + operation column
     (exports.py:138-171 per micro-batch)."""
-    results: list[dict[str, Any]] = []
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.withColumn("operation", classify_operation()).select(
-            DELTA_EXPORT_COLUMNS
-        )
-        new_wm = delta.agg(F.max("updated_at")).first()[0]
-        if new_wm is None:
-            results.append({"epoch": epoch_id, "rowsExported": 0})
-            return
-        path = os.path.join(output_dir, f"delta_{consumer_id}_epoch{epoch_id}.csv")
-        n = write_users_csv(delta, path, DELTA_EXPORT_COLUMNS)
-        store.upsert(consumer_id, new_wm)
-        results.append({"epoch": epoch_id, "rowsExported": n, "file": path})
-
-    q = (
-        users_change_stream(spark, changes_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _export_stream(
+        spark, changes_dir, store, consumer_id, output_dir, checkpoint_dir, "delta",
+        lambda b: b.withColumn("operation", classify_operation()).select(DELTA_EXPORT_COLUMNS),
     )
-    q.awaitTermination()
-    return results
 
 
 def attach_job_listener(spark: SparkSession, emit: Callable[[str, dict], None]):

@@ -19,58 +19,26 @@ watermark are therefore all order-independent — pure functions of the
 data — and the summary row matches a one-statement SQL oracle.
 
 Scale: the feed is file-granular (maxFilesPerTrigger) exactly like a
-warehouse landing zone; each batch's filter/serialize runs in-engine and
-only the per-batch (rows, max_ts) pair reaches the driver. The
-``coalesce(1)`` single-file CSV mirrors the reference's operational
-contract; a 100 TB extract passes single_file=False through the same
-sink (io/csv_sink.py docstring).
+warehouse landing zone. Each batch is one Spark write through the
+shared CSV sink (io/csv_sink.py: ISO timestamps, one file, ordered by
+``ts, event_id``); its row count and an Observation of max(ts) ride that
+write, so only the per-batch (rows, max_ts) pair reaches the driver.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import tempfile
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from cdc_export_system_spark.io.csv_sink import write_users_csv
 from cdc_export_system_spark.registry import register
 
 # Fixed seed watermark: mid-range of the testdata's event horizon. The
 # continuous export ships everything strictly after this instant.
 EXPORT_SEED_WM = "2024-01-15 00:00:00"
-
-
-def _write_events_csv(df: DataFrame, filepath: str) -> int:
-    """CSV serialization under the reference's byte contract, adapted to
-    the events changelog: ISO-8601 UTC timestamps, event-time order,
-    zero rows => no file. Returns rows written."""
-    from cdc_export_system_spark.functions.scalars import iso_utc
-
-    out = df.orderBy("ts", "event_id").select(
-        F.col("event_id").cast("string"),
-        F.col("user_id").cast("string"),
-        F.col("event_type"),
-        iso_utc(F.col("ts")).alias("ts"),
-        F.col("value").cast("string"),
-    )
-    tmp = f"{filepath}.__tmp__{uuid.uuid4().hex}"
-    try:
-        out.coalesce(1).write.option("header", True).csv(tmp)
-        parts = sorted(glob.glob(os.path.join(tmp, "part-*.csv")))
-        n = 0
-        for p in parts:
-            with open(p, "rb") as f:
-                n += sum(1 for _ in f) - 1
-        if n == 0:
-            return 0  # empty batch => no file (exports.py:87-88)
-        os.makedirs(os.path.dirname(filepath) or ".", exist_ok=True)
-        os.replace(parts[0], filepath)
-        return n
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -125,13 +93,15 @@ def stream_export_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         # strictly-after the FIXED seed (exports.py:119 strict `>`);
         # batch order cannot change what ships
         batch = batch_df.filter(F.col("ts") > F.lit(seed).cast("timestamp"))
-        mx = batch.agg(F.max("ts").alias("m")).first()["m"]
-        if mx is None:
-            return  # empty => no file, no advance
-        n = _write_events_csv(
-            batch, os.path.join(out_dir, f"export_{batch_id:05d}.csv")
+        wm = Observation()
+        n = write_users_csv(
+            batch.observe(wm, F.max("ts").alias("m")),
+            os.path.join(out_dir, f"export_{batch_id:05d}.csv"),
+            batch.columns,
+            order_by=["ts", "event_id"],
         )
         if n > 0:  # advance only on success, to max across batches
+            mx = wm.get["m"]
             state["rows"] += n
             state["files"] += 1
             state["wm"] = mx if state["wm"] is None else max(state["wm"], mx)

@@ -703,12 +703,13 @@ def test_minhash_multi_reference_reads_materialized_signatures(spark, name):
 def test_minhash_single_pass_forms_stay_pure_plan(spark, name):
     """The single-reference MinHash forms evaluate the shingle stream
     exactly once already; they must STAY pure-plan (scans, no checkpoint
-    overhead). The fanned view splits the file once, so <=2 scan nodes ==
-    one logical corpus pass."""
+    overhead): each plan holds exactly one parquet scan node, one corpus
+    pass. A node prints as "FileScan parquet", which contains "Scan
+    parquet", so counting the shorter string counts each node once."""
     df = REGISTRY[name].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    scans = plan.count("Scan parquet") + plan.count("FileScan parquet")
-    assert 1 <= scans <= 2, f"{name}: {scans} parquet scans"
+    scans = plan.count("Scan parquet")
+    assert scans == 1, f"{name}: {scans} parquet scans"
 
 
 def test_semdedup_pair_stage_is_cluster_equijoin(spark):

@@ -277,7 +277,7 @@ def test_incremental_stream_crash_mid_batch_resumes_exactly_once(
     every change row is exported exactly once — no loss, no dupes."""
     from pyspark.errors import StreamingQueryException
 
-    from cdc_export_system_spark.streaming import cdc_stream
+    from cdc_export_system_spark.cdc import exports as cdc_exports
 
     d, users = changes_dir
     store = WatermarkStore(spark, str(tmp_path / "state"))
@@ -290,7 +290,7 @@ def test_incremental_stream_crash_mid_batch_resumes_exactly_once(
 
     # second change file arrives; its batch dies mid-write on first attempt
     users.filter(F.col("id") > 100).coalesce(1).write.mode("append").parquet(d)
-    real_write = cdc_stream.write_users_csv
+    real_write = cdc_exports.write_users_csv
     crashed = {"n": 0}
 
     def crash_after_sink(df, filepath, columns, **kw):
@@ -298,7 +298,7 @@ def test_incremental_stream_crash_mid_batch_resumes_exactly_once(
         crashed["n"] += 1
         raise RuntimeError("simulated executor loss after sink write")
 
-    monkeypatch.setattr(cdc_stream, "write_users_csv", crash_after_sink)
+    monkeypatch.setattr(cdc_exports, "write_users_csv", crash_after_sink)
     with pytest.raises(StreamingQueryException):
         run_incremental_export_stream(spark, d, store, "cc", out, ckpt)
     assert crashed["n"] == 1
@@ -306,7 +306,7 @@ def test_incremental_stream_crash_mid_batch_resumes_exactly_once(
     assert store.get("cc") == wm_after_first
 
     # restart without the fault: the uncommitted epoch replays
-    monkeypatch.setattr(cdc_stream, "write_users_csv", real_write)
+    monkeypatch.setattr(cdc_exports, "write_users_csv", real_write)
     res = run_incremental_export_stream(spark, d, store, "cc", out, ckpt)
     live = users.filter(~F.col("is_deleted"))
     assert sum(r["rowsExported"] for r in res) == live.filter(F.col("id") > 100).count()
