@@ -40,9 +40,12 @@ dependencies, mirroring the public Delta Lake / Iceberg design points:
 Scale notes. The log itself is tiny (one small JSON per commit, stats
 not data); snapshot reads hand Spark a plain parquet file list, so
 column pruning / predicate pushdown / partition-sized splits all apply
-unchanged. MERGE does one broadcast-range prune over FILE STATS (a
-driver-side list, thousands of entries for a 100 TB table) and one
-shuffle of only the touched files' rows joined against the batch.
+unchanged. MERGE prunes over FILE STATS (an in-memory list,
+thousands of entries for a 100 TB table) by the batch's key range,
+which an Observation reads off the batch's own checkpoint job. A batch
+touching no file is appended as is (3 Spark jobs: pin, shuffle, write);
+else the touched files' rows are anti-joined against the broadcast
+batch keys and rewritten with it (4 jobs).
 """
 
 from __future__ import annotations
@@ -52,7 +55,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from cdc_export_system_spark.io.atomic import link_publish
 
@@ -278,21 +281,21 @@ class LogTable:
 
     # ------------------------------------------------------------ data --
 
-    def _write_files(
-        self, df: DataFrame, pk: str, k: int, n_files: int
-    ) -> list[dict]:
+    def _write_files(self, df: DataFrame, pk: str, k: int) -> list[dict]:
         """Write df as ONE parquet file per non-empty pk-range bucket
         (bucket = pk div k) and return add-actions with per-file pk
         min/max stats. Bucket membership is a pure function of the key,
         so file boundaries — and therefore merge pruning — are
-        deterministic across runs and partitionings. Files land under a
-        staging dir first; a crash before commit leaves only
-        unreferenced garbage (invisible to every reader, swept by
-        vacuum)."""
+        deterministic across runs and partitionings. The shuffle hashes
+        the bucket alone, so a bucket never spans two partitions, and
+        AQE coalesces the mostly empty partitions into few write tasks.
+        Files land under a staging dir first; a crash before commit
+        leaves only unreferenced garbage (invisible to every reader,
+        swept by vacuum)."""
         staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
         bucketed = df.withColumn(
             "_b", (F.col(pk) / F.lit(k)).cast("long")
-        ).repartition(max(1, n_files), "_b")
+        ).repartition("_b")
         bucketed.write.mode("overwrite").partitionBy("_b").parquet(staging)
         adds = []
         import pyarrow.parquet as pq
@@ -358,7 +361,7 @@ class LogTable:
                 }
             }
         ]
-        for add in t._write_files(df, pk, k, n_files):
+        for add in t._write_files(df, pk, k):
             actions.append({"add": add})
         t._commit(actions, read_version=0, touched=set())
         return t
@@ -415,10 +418,16 @@ class LogTable:
         )
 
     def _to_physical(self, df: DataFrame, snap: Snapshot) -> DataFrame:
+        """df under PHYSICAL names, cast to the table's types (an ``int``
+        batch must not write INT32 into a ``long`` table); a column df
+        lacks (it predates add-only schema evolution) is null."""
         mapping = self._mapping(snap)
+        present = set(df.columns)
         return df.select(
             *[
-                F.col(f.name).alias(mapping[f.name])
+                (F.col(f.name) if f.name in present else F.lit(None))
+                .cast(f.dataType)
+                .alias(mapping[f.name])
                 for f in self._schema(snap).fields
             ]
         )
@@ -651,42 +660,39 @@ class LogTable:
         Retries the whole read-rewrite-commit cycle on a losing race
         whose winner touched disjoint files would be safe to stack, but
         a true overlap raises CommitConflict to the caller."""
-        # Materialize the change batch ONCE. The merge consumes it three
-        # times (key-range stats, the anti-join build side, the upsert
-        # leg of the rewrite) and nothing below ties those evaluations
-        # together, so an un-materialized batch recomputes its whole
-        # upstream subtree per use — 3x the batch's cost per merge, at
-        # any scale. The batch is the DELTA (bounded relative to the
-        # table), so a localCheckpoint of it is the cheap side of that
-        # trade; it also freezes non-deterministic sources for free.
-        # (A persist()+agg single-job variant was A/B'd in r12 and
-        # measured SLOWER — cache encode plus InMemoryTableScan reads
-        # cost more than the dedicated checkpoint job.)
-        changes = changes.localCheckpoint(eager=True)
+        # Materialize the change batch ONCE: a rewrite reads it twice
+        # (anti-join keys, upserts) and a commit retry again, and the
+        # batch is the DELTA, so its localCheckpoint is the cheap side;
+        # it also freezes non-deterministic sources. Its key range is
+        # an Observation on that checkpoint job: pruning runs no job.
+        pk = self._replay().meta["pk"]
+        key_range = Observation()
+        changes = changes.observe(
+            key_range, F.min(pk).alias("lo"), F.max(pk).alias("hi")
+        ).localCheckpoint(eager=True)
         return self._merge_pinned(
-            changes, deleted_col=deleted_col, max_retries=max_retries
+            changes, key_range.get, deleted_col=deleted_col,
+            max_retries=max_retries,
         )
 
     def _merge_pinned(
         self,
         changes: DataFrame,
+        key_range: dict,
         *,
         deleted_col: str,
         max_retries: int,
     ) -> tuple[int, dict]:
+        lo, hi = key_range["lo"], key_range["hi"]
         for _ in range(max_retries):
             snap = self._replay()
             pk = snap.meta["pk"]
-            lo_hi = changes.agg(
-                F.min(pk).alias("lo"), F.max(pk).alias("hi")
-            ).head()
-            if lo_hi["lo"] is None:
+            if lo is None:
                 return snap.version, {
                     "files_total": len(snap.files),
                     "files_touched": 0,
                     "rows_rewritten": 0,
                 }
-            lo, hi = lo_hi["lo"], lo_hi["hi"]
             touched = {
                 p: a
                 for p, a in snap.files.items()
@@ -694,7 +700,8 @@ class LogTable:
             }
             schema = self._schema(snap)
             mapping = self._mapping(snap)
-            if touched:
+            merged = changes.filter(~F.col(deleted_col)).drop(deleted_col)
+            if touched:  # else an append: nothing survives or is deleted
                 # scan physical names, alias back to the logical schema
                 base = self.spark.read.schema(
                     self._physical_schema(snap)
@@ -706,28 +713,18 @@ class LogTable:
                         for f in schema.fields
                     ]
                 )
-            else:
-                base = self.spark.createDataFrame([], schema)
-            upserts = changes.filter(~F.col(deleted_col)).drop(deleted_col)
-            deletes = changes.filter(F.col(deleted_col)).select(pk)
-            survivors = base.join(
-                F.broadcast(changes.select(pk)), pk, "left_anti"
-            )
-            # allowMissingColumns: after add-only schema evolution, a
-            # change batch may omit (or a survivor predate) new columns
-            merged = survivors.unionByName(upserts, allowMissingColumns=True)
-            # fill columns the batch omitted so the physical projection
-            # resolves, then write under PHYSICAL names
-            for lg in mapping:
-                if lg not in merged.columns:
-                    merged = merged.withColumn(
-                        lg, F.lit(None).cast(schema[lg].dataType)
-                    )
+                survivors = base.join(
+                    F.broadcast(changes.select(pk)), pk, "left_anti"
+                )
+                # allowMissingColumns: after add-only schema evolution, a
+                # change batch may omit (or a survivor predate) new columns
+                merged = survivors.unionByName(
+                    merged, allowMissingColumns=True
+                )
             k = snap.meta.get("bucket_k", 1)
-            n_out = snap.meta.get("n_files", max(1, len(touched)))
             actions = [{"remove": {"path": p}} for p in sorted(touched)]
             adds = self._write_files(
-                self._to_physical(merged, snap), mapping[pk], k, n_out
+                self._to_physical(merged, snap), mapping[pk], k
             )
             actions += [{"add": a} for a in adds]
             try:
@@ -762,7 +759,7 @@ class LogTable:
         hi = df.agg(F.max(pk)).head()[0]
         k = max(1, (0 if hi is None else int(hi)) // n_out + 1)
         adds = self._write_files(
-            self._to_physical(df, snap), self._mapping(snap)[pk], k, n_out
+            self._to_physical(df, snap), self._mapping(snap)[pk], k
         )
         actions: list[dict] = [
             {
