@@ -28,96 +28,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The external correctness driver verifies a ~50-entry prefix of
-# ``queries()`` per round, so the dict is ordered to rotate hard driver
-# coverage across the whole registry (the exact count is
-# ``len(load_all())``; tests/test_entry_contract.py pins the rotation
-# invariants) over successive rounds:
-# (1) this round's priority block — previously hash-FAILed queries
-# (retry) plus never-driver-checked representatives of every north-star
-# family (dedup / similarity / text / multimodal / analytics /
-# streaming / tpch / pandas-UDF); (2) the remaining never-checked
-# queries in registry order; (3) queries already driver-green in an
-# earlier round, last.
-_PRIORITY = [
-    # ROUND-11 ORDER (VERDICT r10 #1): exactly 37 registered queries have
-    # never had an external driver row — this round's prefix drains ALL
-    # of them to zero, then new r11 ops, then the stale-green re-check
-    # rotation (the tail is sorted oldest-green-first in _round_order).
-    # 1. Late-r10 additions that only have my own driver-sim rows.
-    "geo_knn_pruned", "txn_table_column_evolution",
-    # 2. agg_* tails (11).
-    "agg_weighted_median", "agg_trimmed_mean", "agg_value_histogram",
-    "agg_user_type_bitmask", "agg_log2_histogram", "agg_entropy",
-    "agg_by_month", "agg_percentiles", "agg_approx_quantile",
-    "agg_countmin_sketch", "agg_kmv_setops",
-    # 3. feat_* family (6).
-    "feat_target_encode", "feat_woe_iv", "feat_hash_crosses",
-    "feat_rank_normalize", "feat_user_activity", "feat_pca_project",
-    # 4. anomaly family (5).
-    "anomaly_zscore", "anomaly_mad", "anomaly_rate_spike",
-    "anomaly_seasonal_residual", "anomaly_seasonal_esd",
-    # 5. events/orders/metrics tails (8).
-    "metric_observe_inline", "metric_open_orders_sweep",
-    "orders_backlog_aging", "event_transition_entropy",
-    "event_type_affinity", "orders_delivery_sla", "supplier_scorecard",
-    "cdc_sequence_gap_audit",
-    # 6. text tails (3).
-    "text_bpe_train_merges", "text_rake_keywords", "text_sliding_windows",
-    # 7. join tails (2).
-    "join_interval_bucketed", "join_scd2_pointintime",
-    # --- 37 never-checked end here ---
-    # New r11 registrations (txn_table_changes, geo adaptive variants,
-    # …) are never-checked and therefore slot in right after this block
-    # via the `rest` branch of _round_order; remaining slots fall
-    # through to the stale-green re-check tail (oldest external green
-    # first — see _round_order).
-]
-
-# ROUND-12 RECHECK BLOCK (VERDICT r11 #7): queries whose internals the
-# two optimization rounds REWROTE but whose newest external driver row
-# predates the rewrite (the r11 rotation sampled elsewhere). They are
-# already green in some earlier round, so the plain oldest-green-first
-# tail would take several rounds to reach them; this block jumps them
-# to the front of the re-check tail — after every never-checked query,
-# so the entry-contract invariant (unchecked strictly first) holds.
-# Order: r12-touched first (er sources, txn footer-max, prefix-total
-# fusion, pin reverts), then r11-touched-but-unsampled.
-_RECHECK = [
-    # r12-touched
-    "mv_delta_join", "agg_freq_items_mg",
-    "er_golden_record", "er_candidate_pairs", "er_em_weights",
-    "er_match_metrics_em", "er_blocking_stats", "er_match_metrics",
-    "er_one_to_one", "er_entity_clusters",
-    "corpus_perplexity_buckets", "text_unigram_logprob", "dq_checks",
-    "txn_table_merge_read", "txn_table_merge_stats",
-    "txn_table_time_travel", "txn_table_changes", "txn_table_replicate",
-    "txn_table_column_evolution", "txn_table_asof_ts",
-    "stream_cdc_logtable_merge", "cdc_export_from_cdf",
-    "mv_from_txn_changes",
-    "agg_quantiles_distributed", "agg_weighted_median",
-    "feat_rank_normalize", "agg_trimmed_mean", "stats_ks_test",
-    "metric_concentration_shares", "text_vocab_coverage",
-    # r11-touched, no r11 row
-    "stats_qq_points", "ml_confusion_matrix", "ml_eval_report",
-    "ab_cuped", "recsys_item_knn", "privacy_uniqueness_risk",
-    "cluster_kmeans_exact", "cluster_kmeans_iterate",
-    "sim_search_ivf_exact", "sim_search_pq_exact",
-    "dedup_semantic_exact", "dedup_semantic_semdedup",
-    "dedup_simhash_banded_pairs", "dedup_edit_distance_verify",
-    "event_growth_accounting", "orders_cohort_ltv",
-    "feat_quantile_bucketize", "ml_feature_corr_matrix",
-]
-
-
+# ``queries()`` per round, so the dict is ordered to rotate driver
+# coverage across the whole registry (tests/test_entry_contract.py pins
+# the order): queries never driver-green in any round first, in
+# registry order; then the green ones, stalest first — by (latest green
+# round, registry index) — so surplus prefix slots re-certify the
+# oldest external rows.
 def _round_order(registry) -> list[str]:
     import glob
     import json
 
-    # every query already driver-GREEN in ANY earlier round goes last, so
-    # the ~50-entry verified prefix always lands on fresh (or previously
-    # failed, i.e. since-fixed) queries; the green tail is sorted
-    # oldest-green-first (VERDICT r10 #2) so surplus prefix slots
-    # re-certify the stalest external rows every round.
     checked: dict[str, int] = {}  # name -> latest green round
     here = os.path.dirname(os.path.abspath(__file__))
     for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
@@ -135,19 +55,10 @@ def _round_order(registry) -> list[str]:
                         checked[name] = max(checked.get(name, 0), rnd)
         except (OSError, ValueError, AttributeError):
             pass
-    prio = [n for n in _PRIORITY if n in registry and n not in checked]
-    prio_set = set(prio)
-    rest = [n for n in registry if n not in prio_set and n not in checked]
-    # touched-by-optimization re-checks lead the green tail (they are
-    # checked, so they stay behind every never-checked query)
-    recheck = [n for n in _RECHECK if n in registry and n in checked]
-    recheck_set = set(recheck)
-    reg_idx = {n: i for i, n in enumerate(registry)}
-    tail = sorted(
-        (n for n in registry if n in checked and n not in recheck_set),
-        key=lambda n: (checked[n], reg_idx[n]),
-    )
-    return prio + rest + recheck + tail
+    unchecked = [n for n in registry if n not in checked]
+    # sorted() is stable: names green in the same round keep registry order
+    stalest_first = sorted((n for n in registry if n in checked), key=checked.get)
+    return unchecked + stalest_first
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -756,7 +756,9 @@ class LogTable:
         pk = snap.meta["pk"]
         n_out = target_files or snap.meta.get("n_files", 8)
         df = self.read(snap.version)
-        hi = df.agg(F.max(pk)).head()[0]
+        # every live add-action holds its file's exact max_pk: the
+        # bucket width needs no scan of the table
+        hi = max((a["max_pk"] for a in snap.files.values()), default=None)
         k = max(1, (0 if hi is None else int(hi)) // n_out + 1)
         adds = self._write_files(
             self._to_physical(df, snap), self._mapping(snap)[pk], k

@@ -129,14 +129,25 @@ def geo_cell_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def near_join_plan(p: DataFrame, verify: bool = True) -> DataFrame:
+def _within_radius(joined: DataFrame) -> DataFrame:
+    """The exact residual of every near-join form: keep each candidate
+    (a, b) pair once (id_a < id_b) when it lies within RADIUS. Cheap
+    |Δ| rejects run before the two multiplies."""
+    dlat = F.col("lat_a") - F.col("lat_b")
+    dlon = F.col("lon_a") - F.col("lon_b")
+    d2 = dlat * dlat + dlon * dlon
+    return joined.filter(
+        (F.col("id_a") < F.col("id_b"))
+        & (F.abs(dlat) <= RADIUS)
+        & (F.abs(dlon) <= RADIUS)
+        & (d2 <= R2)
+    ).select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
+
+
+def near_join_plan(p: DataFrame) -> DataFrame:
     """The cell-blocked radius self-join over ANY (point_id, lat_u,
-    lon_u) DataFrame — shared by the registered query and the scale
-    probes (scripts/probe_geo_scale.py), so what the probes measure is
-    exactly the shipped plan. ``verify=False`` is a PROBE-ONLY knob:
-    it skips the exact distance/id residual filter so the probes can
-    count the raw CANDIDATE volume the blocking admits (the join's
-    true cost driver); every registered query runs with verify=True."""
+    lon_u) DataFrame. Its scale measurements (density regimes and
+    hot-cell skew) are recorded in docs/SCALING.md, round 10."""
     a = p.select(
         F.col("point_id").alias("id_a"),
         F.col("lat_u").alias("lat_a"),
@@ -160,25 +171,13 @@ def near_join_plan(p: DataFrame, verify: bool = True) -> DataFrame:
             (F.floor(F.col("lon_a") / CELL) + F.col("dlon")).alias("cell_lon"),
         )
     )
-    dlat = F.col("lat_a") - F.col("lat_b")
-    dlon = F.col("lon_a") - F.col("lon_b")
-    d2 = dlat * dlat + dlon * dlon
     # NO broadcast hint: the home-cell side is the FULL point corpus,
     # so a forced broadcast would OOM at real volume. The (cell_lat,
     # cell_lon) equi-join shuffles both sides on the cell key — the
     # shape that survives any corpus size — and AQE's runtime stats
     # still convert it to a broadcast join automatically whenever the
-    # corpus actually is small (as at test SF). Cheap |Δ| rejects run
-    # before the two multiplies.
-    joined = a9.join(b, ["cell_lat", "cell_lon"])
-    if verify:
-        joined = joined.filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(dlat) <= RADIUS)
-            & (F.abs(dlon) <= RADIUS)
-            & (d2 <= R2)
-        )
-    return joined.select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
+    # corpus actually is small (as at test SF).
+    return _within_radius(a9.join(b, ["cell_lat", "cell_lon"]))
 
 
 @register(
@@ -252,21 +251,15 @@ def geo_near_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_join_salted_plan(points(spark, sf_dir))
 
 
-def near_join_salted_plan(
-    p: DataFrame,
-    hot_t: int = HOT_CELL_T,
-    n_salt: int = N_SALT,
-    verify: bool = True,
-) -> DataFrame:
-    """Salted form of near_join_plan over ANY point DataFrame; hot_t /
-    n_salt are exposed for the skew probes (the registered query pins
-    the defaults)."""
+def near_join_salted_plan(p: DataFrame) -> DataFrame:
+    """Salted form of near_join_plan over ANY point DataFrame: cells
+    with at least HOT_CELL_T points split into N_SALT sub-keys."""
     cells = p.groupBy(
         F.floor(F.col("lat_u") / CELL).alias("cell_lat"),
         F.floor(F.col("lon_u") / CELL).alias("cell_lon"),
     ).agg(F.count(F.lit(1)).alias("n_points"))
-    hot = cells.filter(F.col("n_points") >= hot_t).select(
-        "cell_lat", "cell_lon", F.lit(n_salt).alias("n_salt")
+    hot = cells.filter(F.col("n_points") >= HOT_CELL_T).select(
+        "cell_lat", "cell_lon", F.lit(N_SALT).alias("n_salt")
     )
     a = p.select(
         F.col("point_id").alias("id_a"),
@@ -305,18 +298,7 @@ def near_join_salted_plan(
         .withColumn("salt", F.col("salt0").cast("int"))
         .drop("n_salt", "ns", "salt0")
     )
-    dlat = F.col("lat_a") - F.col("lat_b")
-    dlon = F.col("lon_a") - F.col("lon_b")
-    d2 = dlat * dlat + dlon * dlon
-    joined = a9.join(b_salted, ["cell_lat", "cell_lon", "salt"])
-    if verify:
-        joined = joined.filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(dlat) <= RADIUS)
-            & (F.abs(dlon) <= RADIUS)
-            & (d2 <= R2)
-        )
-    return joined.select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
+    return _within_radius(a9.join(b_salted, ["cell_lat", "cell_lon", "salt"]))
 
 
 # adaptive refinement thresholds: cells below SPLIT_T points stay
@@ -369,17 +351,12 @@ def geo_near_join_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_join_adaptive_plan(points(spark, sf_dir))
 
 
-def near_join_adaptive_plan(
-    p: DataFrame, split_t: int = SPLIT_T, verify: bool = True
-) -> DataFrame:
+def near_join_adaptive_plan(p: DataFrame) -> DataFrame:
     """Adaptive (density-gated tile-refined) form of near_join_plan
-    over ANY point DataFrame; split_t is exposed for the skew probes
-    (cells < split_t points stay level 0; < 4*split_t refine 2x2;
-    above that 4x4). With verify=False (probe-only) the exact residual
-    filter is skipped but the tile box-intersection PRUNING stays: it
-    is part of the blocking, and its candidate savings are exactly
-    what the probe measures against the fixed grid and the salted
-    variant."""
+    over ANY point DataFrame: cells below SPLIT_T points stay level 0,
+    below 4*SPLIT_T refine 2x2, above that 4x4. Its hot-cell
+    measurements against the fixed grid and the salted variant are in
+    docs/SCALING.md, round 11."""
     # census -> per-cell tile grid width nside in {1, 2, 4}
     cells = (
         p.groupBy(
@@ -390,8 +367,8 @@ def near_join_adaptive_plan(
         .select(
             "cell_lat",
             "cell_lon",
-            F.when(F.col("n_points") >= 4 * split_t, F.lit(4))
-            .when(F.col("n_points") >= split_t, F.lit(2))
+            F.when(F.col("n_points") >= 4 * SPLIT_T, F.lit(4))
+            .when(F.col("n_points") >= SPLIT_T, F.lit(2))
             .otherwise(F.lit(1))
             .alias("nside"),
         )
@@ -458,18 +435,7 @@ def near_join_adaptive_plan(
         & (tlon_lo <= F.col("lon_a") + RADIUS)
         & (tlon_lo + F.col("ts") > F.col("lon_a") - RADIUS)
     ).drop("ns", "ts", "nside")
-    dlat = F.col("lat_a") - F.col("lat_b")
-    dlon = F.col("lon_a") - F.col("lon_b")
-    d2 = dlat * dlat + dlon * dlon
-    joined = a9.join(b, ["cell_lat", "cell_lon", "sub"])
-    if verify:
-        joined = joined.filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(dlat) <= RADIUS)
-            & (F.abs(dlon) <= RADIUS)
-            & (d2 <= R2)
-        )
-    return joined.select("id_a", "id_b", d2.cast("bigint").alias("dist2"))
+    return _within_radius(a9.join(b, ["cell_lat", "cell_lon", "sub"]))
 
 
 @register(
@@ -587,18 +553,11 @@ def geo_knn_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def knn_ring_plan(
-    spark: SparkSession,
-    p: DataFrame,
-    probes: DataFrame,
-    counters: list | None = None,
+    spark: SparkSession, p: DataFrame, probes: DataFrame
 ) -> DataFrame:
     """The fixed-grid expanding-ring exact-kNN loop over ANY point /
-    probe DataFrames — shared by the registered query and the hotspot
-    probes (scripts/probe_knn_hotspot.py), so what the probes measure
-    is exactly the shipped plan. ``counters`` is PROBE-ONLY: when a
-    list is passed, each ring appends its admitted candidate-row count
-    (one extra count() action per ring); registered queries pass
-    None."""
+    probe DataFrames. Its hotspot measurement against the adaptive
+    loop is in docs/SCALING.md, round 11."""
     corpus = p.withColumn("cell_lat", F.floor(F.col("lat_u") / CELL)).withColumn(
         "cell_lon", F.floor(F.col("lon_u") / CELL)
     )
@@ -664,8 +623,6 @@ def knn_ring_plan(
                 d2.cast("bigint").alias("dist2"),
             )
         )
-        if counters is not None:
-            counters.append(cand.count())
         pool = cand if best is None else best.drop("rk").unionByName(cand)
         w = W.partitionBy("probe_id").orderBy("dist2", "neighbor_id")
         topk = (
@@ -743,7 +700,7 @@ def geo_knn_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale story: per ring, a probe's candidate volume is bounded by the
     tiles its CURRENT k-th distance can reach — in a hotspot that is
     the k-nearest neighborhood's own density, not the cell's. Measured
-    (docs/SCALING.md round 11, scripts/probe_knn_hotspot.py): probes
+    (docs/SCALING.md, round 11): probes
     adjacent to an 18,788-point downtown score 55.6x FEWER candidates
     than the fixed ring (611,728 -> 11,007). The loop pays an extra
     stats+bound-join action per ring — constant, while the candidate
@@ -766,16 +723,11 @@ def geo_knn_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def knn_adaptive_plan(
-    spark: SparkSession,
-    p: DataFrame,
-    probes: DataFrame,
-    split_t: int = SPLIT_T,
-    counters: list | None = None,
+    spark: SparkSession, p: DataFrame, probes: DataFrame
 ) -> DataFrame:
     """The adaptive-tile expanding-ring exact-kNN loop over ANY point /
-    probe DataFrames; split_t gates which cells refine (the hotspot
-    probes pass a census-derived threshold, exactly as an operator
-    would from geo_cell_index)."""
+    probe DataFrames; SPLIT_T gates which cells refine, with the same
+    density levels as near_join_adaptive_plan."""
     census = (
         p.groupBy(
             F.floor(F.col("lat_u") / CELL).alias("cell_lat"),
@@ -785,8 +737,8 @@ def knn_adaptive_plan(
         .select(
             "cell_lat",
             "cell_lon",
-            F.when(F.col("n_points") >= 4 * split_t, F.lit(4))
-            .when(F.col("n_points") >= split_t, F.lit(2))
+            F.when(F.col("n_points") >= 4 * SPLIT_T, F.lit(4))
+            .when(F.col("n_points") >= SPLIT_T, F.lit(2))
             .otherwise(F.lit(1))
             .alias("nside"),
         )
@@ -901,8 +853,6 @@ def knn_adaptive_plan(
                 d2.cast("bigint").alias("dist2"),
             )
         )
-        if counters is not None:
-            counters.append(cand.count())
         pool = cand if best is None else best.drop("rk").unionByName(cand)
         w = W.partitionBy("probe_id").orderBy("dist2", "neighbor_id")
         topk = (

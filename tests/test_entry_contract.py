@@ -1,10 +1,9 @@
 """Driver-contract pins for __spark_entry__.py.
 
 The correctness driver consumes a ~50-entry prefix of ``queries()``; the
-rotation machinery that orders it must never silently decay: a typo in
-``_PRIORITY`` is filtered out without error (the name simply never gets
-driver coverage), and an oracle_sql() key that isn't in queries() would
-crash the driver. These pins make both failure modes loud.
+order that rotates it must stay the documented one (never-checked names
+first, then the stalest green rows), and an oracle_sql() key that isn't
+in queries() would crash the driver. These pins make both loud.
 """
 
 from __future__ import annotations
@@ -23,41 +22,6 @@ from cdc_export_system_spark.registry import load_all  # noqa: E402
 REGISTRY = load_all()
 
 
-def test_priority_names_all_registered():
-    unknown = [n for n in entry._PRIORITY if n not in REGISTRY]
-    assert not unknown, f"_PRIORITY names not in the registry: {unknown}"
-    unknown = [n for n in entry._RECHECK if n not in REGISTRY]
-    assert not unknown, f"_RECHECK names not in the registry: {unknown}"
-
-
-def test_priority_has_no_duplicates():
-    for lst, label in ((entry._PRIORITY, "_PRIORITY"),
-                       (entry._RECHECK, "_RECHECK")):
-        seen: set[str] = set()
-        dupes = []
-        for n in lst:
-            if n in seen:
-                dupes.append(n)
-            seen.add(n)
-        assert not dupes, f"duplicate {label} entries: {dupes}"
-
-
-def test_recheck_block_leads_green_tail():
-    """The driver's ~50-slot prefix must reach every optimization-
-    touched query this round: after the never-checked block, the next
-    entries are exactly the registered _RECHECK names, in order."""
-    checked = _driver_green() & set(REGISTRY)
-    order = list(entry.queries())
-    expected = [n for n in entry._RECHECK if n in checked]
-    first_checked = min(
-        (i for i, n in enumerate(order) if n in checked), default=None
-    )
-    if first_checked is None or not expected:
-        return
-    got = order[first_checked:first_checked + len(expected)]
-    assert got == expected
-
-
 def test_queries_and_oracles_align():
     q = entry.queries()
     o = entry.oracle_sql()
@@ -66,11 +30,13 @@ def test_queries_and_oracles_align():
     assert len(q) == len(REGISTRY)
 
 
-def _driver_green() -> set[str]:
-    """Same green predicate as entry._round_order."""
+def _latest_green() -> dict[str, int]:
+    """Same green predicate as entry._round_order: name -> the latest
+    round with a green driver row."""
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
         with open(path) as f:
             for name, row in json.load(f).items():
                 green = row.get("hash_match") is True or (
@@ -78,8 +44,28 @@ def _driver_green() -> set[str]:
                     and row.get("spark_rows") is not None
                 )
                 if green:
-                    checked.add(name)
-    return checked
+                    latest[name] = max(latest.get(name, 0), rnd)
+    return latest
+
+
+def _driver_green() -> set[str]:
+    return set(_latest_green())
+
+
+def test_round_order_is_unchecked_then_stalest_green():
+    """The whole order: every never-checked name first, in registry
+    order; then the green names sorted by (latest green round, registry
+    index)."""
+    latest = _latest_green()
+    reg = list(REGISTRY)
+    idx = {n: i for i, n in enumerate(reg)}
+    expected = [n for n in reg if n not in latest] + sorted(
+        (n for n in reg if n in latest), key=lambda n: (latest[n], idx[n])
+    )
+    assert list(entry.queries()) == expected
+    assert list(entry.oracle_sql()) == [
+        n for n in expected if REGISTRY[n].oracle is not None
+    ]
 
 
 def test_round_order_puts_unchecked_first():

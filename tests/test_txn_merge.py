@@ -109,3 +109,32 @@ def test_merge_spark_job_budget(spark, tmp_path, keys, touched, budget):
         sc._jsc.clearJobGroup()
     assert (stats["files_touched"] > 0) == touched
     assert 1 <= _group_jobs(sc, group) <= budget
+
+
+def test_optimize_takes_bucket_width_from_the_log(spark, tmp_path):
+    """``optimize`` reads the table's max key from the add-actions' exact
+    ``max_pk``: it runs only its rewrite (the shuffle map stage and the
+    write), and the rows and bucket width equal those a full-scan max
+    gives."""
+    t = _mk(spark, tmp_path)
+    for lo in (100, 200, 300):  # three appends, each a new top-bucket file
+        t.merge(
+            spark.createDataFrame(
+                [(k, float(k), False) for k in range(lo, lo + 5)],
+                "k long, v double, _deleted boolean",
+            )
+        )
+    before = _rows(t)
+    scan_max = t.read().agg(F.max("k")).head()[0]
+    n_out = t._replay().meta["n_files"]
+    sc = spark.sparkContext
+    group = f"optimize-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        _, stats = t.optimize()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert 1 <= _group_jobs(sc, group) <= 2
+    assert stats["files_before"] > stats["files_after"]
+    assert t._replay().meta["bucket_k"] == scan_max // n_out + 1
+    assert _rows(t) == before
