@@ -1,6 +1,6 @@
 """Registered queries over the LogTable transaction-log format.
 
-Each query builds a real LogTable in a process-temp directory from the
+Each query builds a real LogTable in a per-call scratch directory from the
 ``orders`` parquet, drives genuine commits through it (copy-on-write
 MERGE upserts/deletes/inserts), and reads results back THROUGH the log
 — so the driver hash certifies the whole format: commit atomicity,
@@ -9,59 +9,33 @@ batches derive deterministically from the key space (dense 0..n-1 in
 the testdata), so every output has a closed-form DuckDB oracle over
 the raw ``orders`` table.
 
-Roots are created per call and swept at interpreter exit (the per-PID
-warehouse-dir precedent from session.py — nothing accumulates across
-runs)."""
+Roots are per-call ``session.scratch_dir`` directories, removed at
+interpreter exit — nothing accumulates across runs."""
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_export_system_spark.io.sources import load_table
-from cdc_export_system_spark.io.txn_table import LogTable
+from cdc_export_system_spark.io.txn_table import LogTable, footer_int_range
 from cdc_export_system_spark.registry import register
-
-_ROOTS: list[str] = []
-
-
-@atexit.register
-def _sweep_roots() -> None:
-    for r in _ROOTS:
-        shutil.rmtree(r, ignore_errors=True)
-
-
-def _new_root() -> str:
-    root = tempfile.mkdtemp(prefix="logtable-")
-    _ROOTS.append(root)
-    return root
-
+from cdc_export_system_spark.session import scratch_dir
 
 _COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
          "o_orderdate", "o_orderpriority"]
 
-_EXACT_STAT_TYPES = {"INT32", "INT64"}  # footer min/max exact by spec
-# plain or INT-annotated only: DATE, TIME, TIMESTAMP and DECIMAL also ride
-# INT32/INT64 physical, but their statistics are not the integer itself
-_INT_LOGICAL_TYPES = {"NONE", "INT"}
-
 
 def _source_max_int(sf_dir: str, table: str, col: str) -> int | None:
     """Exact max of an INTEGER column straight from the source parquet
-    FOOTER statistics — zero data pages, no Spark job (the same
-    exact-by-spec argument as txn_table._pk_stats). Returns None (and
-    the caller falls back to a Spark max-scan) when the source is not
-    the single-file layout, the footer is unreadable or corrupt
-    (pyarrow raises ArrowInvalid, a ValueError), the column is not
-    integer-typed in both its physical and logical type, or any row
-    group lacks stats. None is also the correct answer for an empty
-    table: zero row groups yield no max."""
-    import pyarrow.parquet as pq
-
+    footer (txn_table.footer_int_range). Returns None (and the caller
+    falls back to a Spark max-scan) when the source is not the
+    single-file layout, the footer is unreadable or corrupt (pyarrow
+    raises ArrowInvalid, a ValueError), or the footer has no exact
+    integer range — which is also the correct answer for an empty
+    table."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     if not os.path.isfile(path):
         return None
@@ -69,25 +43,8 @@ def _source_max_int(sf_dir: str, table: str, col: str) -> int | None:
         md = pq.read_metadata(path)
     except (OSError, ValueError):
         return None
-    idx = None
-    for i in range(len(md.schema)):
-        c = md.schema.column(i)
-        if (
-            c.name == col
-            and c.physical_type in _EXACT_STAT_TYPES
-            and c.logical_type.type in _INT_LOGICAL_TYPES
-        ):
-            idx = i
-            break
-    if idx is None:
-        return None
-    mx = None
-    for g in range(md.num_row_groups):
-        st = md.row_group(g).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None
-        mx = st.max if mx is None else max(mx, st.max)
-    return mx
+    rng = footer_int_range(md, col)
+    return None if rng is None else rng[1]
 
 
 def _orders_max_key(spark: SparkSession, sf_dir: str, orders: DataFrame):
@@ -98,6 +55,22 @@ def _orders_max_key(spark: SparkSession, sf_dir: str, orders: DataFrame):
     return mx
 
 
+def _orders_table(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, LogTable, int]:
+    """(orders, LogTable v1 of orders, max key or -1 when empty). One
+    max serves both the callers' insert key shift and create's bucket
+    sizing (max_pk_hint), so create runs no max-scan of its own."""
+    orders = load_table(spark, sf_dir, "orders").select(_COLS)
+    mx = _orders_max_key(spark, sf_dir, orders)
+    mx = -1 if mx is None else int(mx)
+    t = LogTable.create(
+        spark, scratch_dir("logtable-"), orders, "o_orderkey", n_files=8,
+        max_pk_hint=mx,
+    )
+    return orders, t, mx
+
+
 def _build_merged_table(
     spark: SparkSession, sf_dir: str
 ) -> tuple[LogTable, int]:
@@ -105,16 +78,7 @@ def _build_merged_table(
     v3 = inserts (keys %11 shifted past the old max). Returns (table,
     max_key). With an empty source the merges are no-ops and only v1
     exists — the oracles mirror that."""
-    orders = load_table(spark, sf_dir, "orders").select(_COLS)
-    # one max serves both the insert key shift AND create's bucket
-    # sizing (max_pk_hint) — read from the source parquet footer when
-    # the stats are exact (zero data pages, no Spark job), Spark
-    # max-scan otherwise
-    mx = _orders_max_key(spark, sf_dir, orders)
-    mx = -1 if mx is None else int(mx)
-    t = LogTable.create(
-        spark, _new_root(), orders, "o_orderkey", n_files=8, max_pk_hint=mx
-    )
+    orders, t, mx = _orders_table(spark, sf_dir)
     key = F.col("o_orderkey")
     b1 = (
         orders.filter((key % 7 == 0) | (key % 13 == 0))
@@ -139,6 +103,16 @@ def _build_merged_table(
     )
     t.merge(b2)
     return t, mx
+
+
+def _version_counts(t: LogTable, version: int) -> tuple[int, int, int]:
+    """(rows, status-'U' rows, status-'N' rows) of one version."""
+    agg = t.read(version=version).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum((F.col("o_orderstatus") == "U").cast("bigint")).alias("u"),
+        F.sum((F.col("o_orderstatus") == "N").cast("bigint")).alias("i"),
+    ).head()
+    return int(agg["n"]), int(agg["u"] or 0), int(agg["i"] or 0)
 
 
 _MERGED_ORACLE = """
@@ -187,35 +161,38 @@ def txn_table_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.read()
 
 
+_ASOF_BASE = """
+    v1 AS (SELECT CAST(1 AS BIGINT) AS version,
+                  CAST(count(*) AS BIGINT) AS n_rows,
+                  CAST(0 AS BIGINT) AS n_updated,
+                  CAST(0 AS BIGINT) AS n_new
+           FROM orders),
+    v2 AS (SELECT CAST(2 AS BIGINT),
+                  CAST(count(*) FILTER (WHERE o_orderkey % 13 <> 0)
+                       AS BIGINT),
+                  CAST(count(*) FILTER (WHERE o_orderkey % 7 = 0
+                                          AND o_orderkey % 13 <> 0)
+                       AS BIGINT),
+                  CAST(0 AS BIGINT)
+           FROM orders HAVING count(*) > 0),
+    v3 AS (SELECT CAST(3 AS BIGINT),
+                  CAST(count(*) FILTER (WHERE o_orderkey % 13 <> 0)
+                       + count(*) FILTER (WHERE o_orderkey % 11 = 0)
+                       AS BIGINT),
+                  CAST(count(*) FILTER (WHERE o_orderkey % 7 = 0
+                                          AND o_orderkey % 13 <> 0)
+                       AS BIGINT),
+                  CAST(count(*) FILTER (WHERE o_orderkey % 11 = 0)
+                       AS BIGINT)
+           FROM orders HAVING count(*) > 0),
+    base AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2
+             UNION ALL SELECT * FROM v3)
+"""
+
+
 @register(
     "txn_table_time_travel",
-    oracle=f"""
-        WITH v1 AS (SELECT CAST(1 AS BIGINT) AS version,
-                           CAST(count(*) AS BIGINT) AS n_rows,
-                           CAST(0 AS BIGINT) AS n_updated,
-                           CAST(0 AS BIGINT) AS n_new
-                    FROM orders),
-        v2 AS (SELECT CAST(2 AS BIGINT),
-                      CAST(count(*) FILTER (WHERE o_orderkey % 13 <> 0)
-                           AS BIGINT),
-                      CAST(count(*) FILTER (WHERE o_orderkey % 7 = 0
-                                              AND o_orderkey % 13 <> 0)
-                           AS BIGINT),
-                      CAST(0 AS BIGINT)
-               FROM orders HAVING count(*) > 0),
-        v3 AS (SELECT CAST(3 AS BIGINT),
-                      CAST(count(*) FILTER (WHERE o_orderkey % 13 <> 0)
-                           + count(*) FILTER (WHERE o_orderkey % 11 = 0)
-                           AS BIGINT),
-                      CAST(count(*) FILTER (WHERE o_orderkey % 7 = 0
-                                              AND o_orderkey % 13 <> 0)
-                           AS BIGINT),
-                      CAST(count(*) FILTER (WHERE o_orderkey % 11 = 0)
-                           AS BIGINT)
-               FROM orders HAVING count(*) > 0)
-        SELECT * FROM v1 UNION ALL SELECT * FROM v2 UNION ALL
-        SELECT * FROM v3
-    """,
+    oracle=f"WITH {_ASOF_BASE} SELECT * FROM base",
     tags=("io", "txn", "cdc"),
 )
 def txn_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,15 +205,7 @@ def txn_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merges are no-op (no commit), so only v1 exists, and the
     oracle's HAVING mirrors that."""
     t, _ = _build_merged_table(spark, sf_dir)
-    rows = []
-    for v in t.history():
-        snap = t.read(version=v)
-        agg = snap.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("o_orderstatus") == "U").cast("bigint")).alias("u"),
-            F.sum((F.col("o_orderstatus") == "N").cast("bigint")).alias("i"),
-        ).head()
-        rows.append((v, int(agg["n"]), int(agg["u"] or 0), int(agg["i"] or 0)))
+    rows = [(v, *_version_counts(t, v)) for v in t.history()]
     return spark.createDataFrame(
         rows, "version bigint, n_rows bigint, n_updated bigint, n_new bigint"
     )
@@ -265,19 +234,14 @@ def txn_table_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count equal to that one bucket's population. This is the
     incremental-CDC cost model at 100 TB: a batch touching 1/8 of the
     key space rewrites 1/8 of the files, never the table."""
-    orders = load_table(spark, sf_dir, "orders").select(_COLS)
-    mx = _orders_max_key(spark, sf_dir, orders)
-    t = LogTable.create(
-        spark, _new_root(), orders, "o_orderkey", n_files=8,
-        max_pk_hint=-1 if mx is None else int(mx),
-    )
-    if mx is None:
+    orders, t, mx = _orders_table(spark, sf_dir)
+    if mx < 0:  # empty source (keys are non-negative)
         return spark.createDataFrame(
             [],
             "version bigint, files_total bigint, files_touched bigint,"
             " rows_rewritten bigint, n_rows_after bigint",
         )
-    k = int(mx) // 8 + 1
+    k = mx // 8 + 1
     batch = (
         orders.filter(F.col("o_orderkey") < k)
         .withColumn("o_orderstatus", F.lit("X"))
@@ -345,14 +309,7 @@ def stream_cdc_logtable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the stream applies each batch against file stats (only
     overlapping buckets rewrite); the availableNow trigger is the
     backfill mode, the same code runs continuously."""
-    import os as _os
-
-    orders = load_table(spark, sf_dir, "orders").select(_COLS)
-    mx = _orders_max_key(spark, sf_dir, orders)
-    mx = -1 if mx is None else int(mx)
-    t = LogTable.create(
-        spark, _new_root(), orders, "o_orderkey", n_files=8, max_pk_hint=mx
-    )
+    orders, t, mx = _orders_table(spark, sf_dir)
     key = F.col("o_orderkey")
     feed = (
         orders.filter(key % 5 == 0)
@@ -372,9 +329,9 @@ def stream_cdc_logtable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("bid", F.lit(2))
         )
     )
-    stage = _new_root()
-    feed_dir = _os.path.join(stage, "feed")
-    ckpt_dir = _os.path.join(stage, "ckpt")
+    stage = scratch_dir("logtable-feed-")
+    feed_dir = os.path.join(stage, "feed")
+    ckpt_dir = os.path.join(stage, "ckpt")
     feed.write.mode("overwrite").parquet(feed_dir)
     stream = spark.readStream.schema(feed.schema).parquet(feed_dir)
 
@@ -390,35 +347,6 @@ def stream_cdc_logtable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     return t.read()
-
-
-_ASOF_BASE = """
-    v1 AS (SELECT CAST(1 AS BIGINT) AS version,
-                  CAST(count(*) AS BIGINT) AS n_rows,
-                  CAST(0 AS BIGINT) AS n_updated,
-                  CAST(0 AS BIGINT) AS n_new
-           FROM orders),
-    v2 AS (SELECT CAST(2 AS BIGINT),
-                  CAST(count(*) FILTER (WHERE o_orderkey % 13 <> 0)
-                       AS BIGINT),
-                  CAST(count(*) FILTER (WHERE o_orderkey % 7 = 0
-                                          AND o_orderkey % 13 <> 0)
-                       AS BIGINT),
-                  CAST(0 AS BIGINT)
-           FROM orders HAVING count(*) > 0),
-    v3 AS (SELECT CAST(3 AS BIGINT),
-                  CAST(count(*) FILTER (WHERE o_orderkey % 13 <> 0)
-                       + count(*) FILTER (WHERE o_orderkey % 11 = 0)
-                       AS BIGINT),
-                  CAST(count(*) FILTER (WHERE o_orderkey % 7 = 0
-                                          AND o_orderkey % 13 <> 0)
-                       AS BIGINT),
-                  CAST(count(*) FILTER (WHERE o_orderkey % 11 = 0)
-                       AS BIGINT)
-           FROM orders HAVING count(*) > 0),
-    base AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2
-             UNION ALL SELECT * FROM v3)
-"""
 
 
 @register(
@@ -457,14 +385,7 @@ def txn_table_asof_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for probe, ts in (("at_commit", stamps[v]), ("pre_next", nxt)):
             rv = t.version_asof(ts)
-            agg = t.read(version=rv).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("o_orderstatus") == "U").cast("bigint")).alias("u"),
-                F.sum((F.col("o_orderstatus") == "N").cast("bigint")).alias("i"),
-            ).head()
-            rows.append(
-                (probe, v, rv, int(agg["n"]), int(agg["u"] or 0), int(agg["i"] or 0))
-            )
+            rows.append((probe, v, rv, *_version_counts(t, rv)))
     return spark.createDataFrame(
         rows,
         "probe string, version bigint, resolved bigint, n_rows bigint,"
@@ -713,7 +634,7 @@ def txn_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1 == the original orders snapshot, so its max key is the mx the
     # builder already computed — same bucket K, no second max-scan
     replica = LogTable.create(
-        spark, _new_root(), t.read(version=1), "o_orderkey", n_files=8,
+        spark, scratch_dir("logtable-"), t.read(version=1), "o_orderkey", n_files=8,
         max_pk_hint=mx,
     )
     for v in t.history():
@@ -755,8 +676,7 @@ def txn_table_column_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnMapping design point, with the anti-resurrection rule
     (re-added columns get fresh physical names) pinned separately in
     tests/test_txn_table.py."""
-    orders = load_table(spark, sf_dir, "orders").select(_COLS)
-    t = LogTable.create(spark, _new_root(), orders, "o_orderkey", n_files=8)
+    _, t, _ = _orders_table(spark, sf_dir)
     t.rename_column("o_totalprice", "price_usd")
     t.drop_column("o_orderpriority")
     key = F.col("o_orderkey")

@@ -15,8 +15,10 @@ dependencies, mirroring the public Delta Lake / Iceberg design points:
   created with ``O_CREAT | O_EXCL`` (atomic on a POSIX filesystem; on
   an object store you would swap in a commit service or conditional
   PUT, which is exactly what Delta-on-S3 does). A loser re-reads the
-  log, checks for conflicts (any file it read-or-removed that a
-  concurrent commit removed), and retries or raises.
+  winner's commit and conflicts when the winner removed a file it read
+  or removed, or ADDED a file whose pk range overlaps the loser's batch
+  (Delta's concurrent-append rule: else two merges could both insert
+  the same new key); otherwise it retries on top.
 * **Snapshot isolation & time travel** — a read resolves the log at a
   version (default: latest), replays add/remove into the live file
   set, and reads ONLY those parquet files. Data files are immutable,
@@ -33,6 +35,10 @@ dependencies, mirroring the public Delta Lake / Iceberg design points:
   readers start from the newest checkpoint <= the requested version,
   so log replay is O(commits since checkpoint), not O(all commits) —
   the Delta ``_last_checkpoint`` discipline.
+* **Change data feed** — ``changes`` reads each commit's own ``add`` /
+  ``remove`` actions: a data file name is a fresh uuid, never re-added,
+  so a commit's actions ARE the diff of its snapshot against the
+  previous one, with no replay per version.
 * **Vacuum** — deletes data files no LIVE version references (i.e.
   removed at or before a horizon version); time travel to vacuumed
   versions then correctly fails fast.
@@ -52,10 +58,23 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from functools import reduce
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import (
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from cdc_export_system_spark.io.atomic import link_publish
 
@@ -68,6 +87,10 @@ CHECKPOINT_EVERY = 10
 # take milliseconds; the horizon is hours). Part files retired by a
 # COMMITTED remove-action are vacuumable at any age.
 TMP_SWEEP_HORIZON_S = 3600.0
+# races one commit may lose, and read-rewrite-commit cycles one merge
+# may run, before CommitConflict
+_COMMIT_ATTEMPTS = 20
+_MERGE_ATTEMPTS = 3
 
 
 class CommitConflict(Exception):
@@ -82,38 +105,59 @@ def _ckpt_path(root: str, version: int) -> str:
     return os.path.join(root, LOG_DIR, f"{version:020d}.checkpoint.parquet")
 
 
+def _read_log(root: str, version: int) -> list[dict]:
+    """The actions of one commit in file order; ``_commit`` always
+    writes the ``commit`` stamp first."""
+    with open(_log_path(root, version)) as f:
+        return [json.loads(line) for line in f]
+
+
+def _overlaps(add: dict, lo, hi) -> bool:
+    return not (add["max_pk"] < lo or add["min_pk"] > hi)
+
+
 _EXACT_STAT_TYPES = {"INT32", "INT64"}  # footer min/max exact, never truncated
+# plain or INT-annotated only: DATE, TIME, TIMESTAMP and DECIMAL also ride
+# INT32/INT64 physical, but their statistics are not the integer itself
+_INT_LOGICAL_TYPES = {"NONE", "INT"}
+
+
+def footer_int_range(md, col: str) -> tuple[int, int] | None:
+    """(min, max) of an INTEGER column from parquet FOOTER statistics:
+    zero data pages, no Spark job, and exact, because integer stats
+    are exact by spec. None when the column is not integer-typed in
+    both its physical and its logical type, when any row group lacks
+    stats, or when there are no row groups (an empty file has no
+    range)."""
+    for idx in range(len(md.schema)):
+        c = md.schema.column(idx)
+        if (
+            c.name == col
+            and c.physical_type in _EXACT_STAT_TYPES
+            and c.logical_type.type in _INT_LOGICAL_TYPES
+        ):
+            break
+    else:
+        return None
+    mn = mx = None
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(idx).statistics
+        if st is None or not st.has_min_max:
+            return None
+        mn = st.min if mn is None else min(mn, st.min)
+        mx = st.max if mx is None else max(mx, st.max)
+    return None if mn is None else (mn, mx)
 
 
 def _pk_stats(md, pk: str, src: str) -> tuple:
-    """(min_pk, max_pk) for a freshly staged file — from the parquet
-    FOOTER statistics when the pk is an integer column (Spark always
-    writes them, and integer stats are exact by spec), falling back to
-    a data-page read of the pk column otherwise (string stats may be
-    truncated, and a foreign writer could omit stats). The footer path
-    reads zero data pages: stats collection used to be a full pk-column
-    re-read per staged file — measurable at bench scale, pure waste at
-    100 TB where it re-reads the whole key space once per merge."""
-    idx = None
-    for i in range(len(md.schema)):
-        c = md.schema.column(i)
-        if c.name == pk and c.physical_type in _EXACT_STAT_TYPES:
-            idx = i
-            break
-    if idx is not None:
-        mn = mx = None
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            if st is None or not st.has_min_max:
-                mn = None
-                break
-            mn = st.min if mn is None else min(mn, st.min)
-            mx = st.max if mx is None else max(mx, st.max)
-        if mn is not None:
-            return mn, mx
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
+    """(min_pk, max_pk) for a freshly staged file: from the footer
+    (Spark always writes integer stats), else from a data-page read of
+    the pk column (a foreign writer could omit stats). Stats collection
+    used to be a full pk-column re-read per staged file, which at
+    100 TB re-reads the whole key space once per merge."""
+    rng = footer_int_range(md, pk)
+    if rng is not None:
+        return rng
     col = pq.read_table(src, columns=[pk]).column(0)
     return pc.min(col).as_py(), pc.max(col).as_py()
 
@@ -165,8 +209,6 @@ class LogTable:
         for v in reversed([v for v in versions if v <= target]):
             cp = _ckpt_path(self.root, v)
             if os.path.exists(cp):
-                import pyarrow.parquet as pq
-
                 tbl = pq.read_table(cp).to_pylist()
                 for row in tbl:
                     if row["kind"] == "meta":
@@ -176,21 +218,19 @@ class LogTable:
                 start = v + 1
                 break
         for v in [x for x in versions if start <= x <= target]:
-            with open(_log_path(self.root, v)) as f:
-                for line in f:
-                    action = json.loads(line)
-                    if "meta" in action:
-                        meta = action["meta"]
-                    elif "add" in action:
-                        files[action["add"]["path"]] = action["add"]
-                    elif "remove" in action:
-                        if action["remove"]["path"] not in files:
-                            raise ValueError(
-                                "vacuumed or unknown file removed at "
-                                f"v{v}: time travel below the vacuum "
-                                "horizon is gone"
-                            )
-                        del files[action["remove"]["path"]]
+            for action in _read_log(self.root, v):
+                if "meta" in action:
+                    meta = action["meta"]
+                elif "add" in action:
+                    files[action["add"]["path"]] = action["add"]
+                elif "remove" in action:
+                    if action["remove"]["path"] not in files:
+                        raise ValueError(
+                            "vacuumed or unknown file removed at "
+                            f"v{v}: time travel below the vacuum "
+                            "horizon is gone"
+                        )
+                    del files[action["remove"]["path"]]
         # a vacuumed file may still be referenced when time-traveling
         # BELOW the vacuum horizon — fail fast, not silently partial
         for path in files:
@@ -205,7 +245,7 @@ class LogTable:
         actions: list[dict],
         read_version: int,
         touched: set[str],
-        max_retries: int = 20,
+        key_range: tuple | None = None,
     ) -> int:
         """Atomically publish the next log file via link(2) election.
 
@@ -222,9 +262,10 @@ class LogTable:
         (tests/test_txn_table.py::
         test_concurrent_writers_serialize_without_loss).
 
-        On losing the race: re-validate that the winner removed no
-        file we read or removed (if it did -> CommitConflict), else
-        retry on top."""
+        On losing the race: CommitConflict if the winner removed a
+        file we read or removed, or added a file whose pk range
+        overlaps our batch's ``key_range`` (its rows may hold keys we
+        upsert or delete); else retry on top."""
         stamped = [
             {"commit": {"ts_us": time.time_ns() // 1_000}},
             *actions,
@@ -237,26 +278,30 @@ class LogTable:
             os.fsync(f.fileno())
         try:
             attempt = read_version + 1
-            for _ in range(max_retries):
+            for _ in range(_COMMIT_ATTEMPTS):
                 if not link_publish(tmp, _log_path(self.root, attempt)):
                     # concurrent winner: check their actions against ours
-                    with open(_log_path(self.root, attempt)) as f:
-                        for line in f:
-                            act = json.loads(line)
-                            if (
-                                "remove" in act
-                                and act["remove"]["path"] in touched
-                            ):
-                                raise CommitConflict(
-                                    f"file {act['remove']['path']} was "
-                                    "removed by concurrent commit "
-                                    f"v{attempt}"
-                                )
+                    for act in _read_log(self.root, attempt):
+                        if "remove" in act and act["remove"]["path"] in touched:
+                            raise CommitConflict(
+                                f"file {act['remove']['path']} was removed "
+                                f"by concurrent commit v{attempt}"
+                            )
+                        if (
+                            key_range is not None
+                            and "add" in act
+                            and _overlaps(act["add"], *key_range)
+                        ):
+                            raise CommitConflict(
+                                f"file {act['add']['path']} added by "
+                                f"concurrent commit v{attempt} overlaps "
+                                f"keys {key_range}"
+                            )
                     attempt += 1
                     continue
                 self._maybe_checkpoint(attempt)
                 return attempt
-            raise CommitConflict(f"lost {max_retries} commit races")
+            raise CommitConflict(f"lost {_COMMIT_ATTEMPTS} commit races")
         finally:
             try:
                 os.unlink(tmp)
@@ -267,9 +312,6 @@ class LogTable:
         if version % CHECKPOINT_EVERY != 0:
             return
         snap = self._replay(version)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         rows = [{"kind": "meta", "path": "", "body": json.dumps(snap.meta)}]
         rows += [
             {"kind": "add", "path": p, "body": json.dumps(a)}
@@ -298,8 +340,6 @@ class LogTable:
         ).repartition("_b")
         bucketed.write.mode("overwrite").partitionBy("_b").parquet(staging)
         adds = []
-        import pyarrow.parquet as pq
-
         for bdir in sorted(os.listdir(staging)):
             if not bdir.startswith("_b="):
                 continue
@@ -323,8 +363,6 @@ class LogTable:
                 }
             )
             os.replace(src, os.path.join(self.root, final))
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
         return adds
 
@@ -338,11 +376,18 @@ class LogTable:
         """Create version 1 from df, bucketing rows into n_files files
         by pk range (deterministic membership: file i holds pk div K ==
         i for a fixed K), so file stats and pruning behave identically
-        across runs and partitionings. ``max_pk_hint``: callers that
-        already know max(pk) (or any upper bound >= it) pass it to
-        skip the dedicated max-scan action — one full pass over df
-        saved; bucket K only needs AN upper bound, membership stays a
-        pure function of the key."""
+        across runs and partitionings. The pk must be an integer
+        column: bucket K and the file stats are integer arithmetic.
+        ``max_pk_hint``: callers that already know max(pk) (or any
+        upper bound >= it) pass it to skip the dedicated max-scan
+        action — one full pass over df saved; bucket K only needs AN
+        upper bound, membership stays a pure function of the key."""
+        pk_type = df.schema[pk].dataType
+        if not isinstance(pk_type, IntegralType):
+            raise ValueError(
+                f"primary key {pk!r} must be an integer column, "
+                f"not {pk_type.simpleString()}"
+            )
         os.makedirs(os.path.join(root, LOG_DIR), exist_ok=True)
         t = cls(spark, root)
         hi = (
@@ -369,36 +414,32 @@ class LogTable:
     def read(self, version: int | None = None) -> DataFrame:
         """Resolve the snapshot (and ITS meta — schema + column mapping
         are versioned, so time travel reads every version under that
-        version's own logical schema), scan the live files with the
-        PHYSICAL schema, and alias physical -> logical."""
+        version's own logical schema) and scan its live files."""
         snap = self._replay(version)
-        paths = [os.path.join(self.root, p) for p in snap.paths]
+        return self._scan(snap, snap.paths)
+
+    def _scan(self, snap: Snapshot, paths: list[str]) -> DataFrame:
+        """The data files ``paths`` (relative to the root) read under
+        the snapshot's PHYSICAL schema, aliased physical -> logical."""
+        schema = self._schema(snap)
         if not paths:
-            return self.spark.createDataFrame([], self._schema(snap))
-        phys = self.spark.read.schema(self._physical_schema(snap)).parquet(
-            *paths
-        )
+            return self.spark.createDataFrame([], schema)
         mapping = self._mapping(snap)
-        return phys.select(
-            *[
-                F.col(mapping[f.name]).alias(f.name)
-                for f in self._schema(snap).fields
-            ]
-        )
+        return self.spark.read.schema(self._physical_schema(snap)).parquet(
+            *[os.path.join(self.root, p) for p in paths]
+        ).select(*[F.col(mapping[f.name]).alias(f.name) for f in schema.fields])
 
-    def _schema(self, snap: Snapshot):
-        from pyspark.sql.types import StructType
-
+    def _schema(self, snap: Snapshot) -> StructType:
         return StructType.fromJson(json.loads(snap.meta["schema"]))
 
     # -------------------------------------------- column mapping -------
     # Logical (user-facing) column names map to PHYSICAL parquet column
     # names — the Delta columnMapping design point. Data files are
-    # immutable, so rename/drop are metadata-only commits: the mapping
-    # changes, the files do not. Legacy logs without a mapping read as
-    # identity. ``all_physical`` records every physical name ever
-    # allocated so a column re-added after a drop NEVER resurrects the
-    # dropped column's old data (it gets a fresh physical name).
+    # immutable, so rename/drop/add are metadata-only commits: the
+    # mapping changes, the files do not. Legacy logs without a mapping
+    # read as identity. ``all_physical`` records every physical name
+    # ever allocated so a column re-added after a drop NEVER resurrects
+    # the dropped column's old data (it gets a fresh physical name).
 
     def _mapping(self, snap: Snapshot) -> dict[str, str]:
         m = snap.meta.get("column_mapping")
@@ -406,9 +447,7 @@ class LogTable:
             m = {f.name: f.name for f in self._schema(snap).fields}
         return m
 
-    def _physical_schema(self, snap: Snapshot):
-        from pyspark.sql.types import StructField, StructType
-
+    def _physical_schema(self, snap: Snapshot) -> StructType:
         mapping = self._mapping(snap)
         return StructType(
             [
@@ -432,6 +471,34 @@ class LogTable:
             ]
         )
 
+    def _commit_schema(
+        self, snap: Snapshot, schema: StructType, mapping: dict[str, str]
+    ) -> int:
+        """Commit ``schema`` as the new logical schema, with ``mapping``
+        its logical -> physical names. A column the mapping lacks gets
+        a physical name no version of the table ever used; the pk
+        follows its physical column through a rename."""
+        used = set(snap.meta.get("all_physical", [])) | set(
+            self._mapping(snap).values()
+        )
+        mapping = dict(mapping)
+        for f in schema.fields:
+            if f.name not in mapping:
+                phys = f.name
+                if phys in used:
+                    phys = f"{f.name}_{uuid.uuid4().hex[:8]}"
+                mapping[f.name] = phys
+                used.add(phys)
+        pk_phys = self._mapping(snap)[snap.meta["pk"]]
+        meta = {
+            **snap.meta,
+            "pk": next(n for n, p in mapping.items() if p == pk_phys),
+            "schema": schema.json(),
+            "column_mapping": mapping,
+            "all_physical": sorted(used),
+        }
+        return self._commit([{"meta": meta}], snap.version, touched=set())
+
     def rename_column(self, old: str, new: str) -> int:
         """Metadata-only RENAME: the logical schema and mapping change,
         every immutable data file keeps its physical column untouched.
@@ -444,25 +511,18 @@ class LogTable:
             raise ValueError(f"column {new!r} already exists")
         mapping = dict(self._mapping(snap))
         mapping[new] = mapping.pop(old)
-        from pyspark.sql.types import StructField, StructType
-
-        new_schema = StructType(
-            [
-                StructField(new if f.name == old else f.name, f.dataType, f.nullable)
-                for f in schema.fields
-            ]
-        )
-        meta = {
-            **snap.meta,
-            "schema": new_schema.json(),
-            "column_mapping": mapping,
-            "all_physical": sorted(
-                set(snap.meta.get("all_physical", [])) | set(mapping.values())
+        return self._commit_schema(
+            snap,
+            StructType(
+                [
+                    StructField(
+                        new if f.name == old else f.name, f.dataType, f.nullable
+                    )
+                    for f in schema.fields
+                ]
             ),
-        }
-        if snap.meta["pk"] == old:
-            meta["pk"] = new
-        return self._commit([{"meta": meta}], snap.version, touched=set())
+            mapping,
+        )
 
     def drop_column(self, name: str) -> int:
         """Metadata-only DROP: the column leaves the logical schema and
@@ -476,21 +536,30 @@ class LogTable:
         if name == snap.meta["pk"]:
             raise ValueError("cannot drop the primary key column")
         mapping = dict(self._mapping(snap))
-        retired = mapping.pop(name)
-        from pyspark.sql.types import StructType
+        del mapping[name]
+        return self._commit_schema(
+            snap, StructType([f for f in schema.fields if f.name != name]), mapping
+        )
 
-        new_schema = StructType([f for f in schema.fields if f.name != name])
-        meta = {
-            **snap.meta,
-            "schema": new_schema.json(),
-            "column_mapping": mapping,
-            "all_physical": sorted(
-                set(snap.meta.get("all_physical", []))
-                | set(mapping.values())
-                | {retired}
-            ),
-        }
-        return self._commit([{"meta": meta}], snap.version, touched=set())
+    def add_columns(self, new_schema: StructType) -> int:
+        """SCHEMA EVOLUTION (add-only): commit a widened schema. Old
+        data files stay as-is; reads reconcile by filling absent
+        columns with nulls (Spark's parquet reader does this given the
+        table-level schema), so no data rewrite happens — the Delta
+        add-column semantics. Dropping or retyping columns is refused:
+        that would silently change the meaning of immutable files."""
+        snap = self._replay()
+        old = self._schema(snap)
+        for f in old.fields:
+            match = [g for g in new_schema.fields if g.name == f.name]
+            if not match or match[0].dataType != f.dataType:
+                raise ValueError(
+                    f"schema evolution is add-only: column {f.name!r} "
+                    "missing or retyped in the new schema"
+                )
+        if len(new_schema.fields) == len(old.fields):
+            return snap.version
+        return self._commit_schema(snap, new_schema, self._mapping(snap))
 
     def history(self) -> list[int]:
         return _list_versions(self.root)
@@ -500,23 +569,13 @@ class LogTable:
         monotonic in version order (effective_ts(v) = max(recorded,
         effective_ts(v-1)+1)) — the Delta Lake timestamp-adjustment
         rule, which makes "as of ts" well-defined even when a racing
-        loser's clock stamped a later wall time than the next winner.
-        Logs written before commit stamping fall back to file mtime."""
+        loser's clock stamped a later wall time than the next winner."""
         out: dict[int, int] = {}
         prev = -1
         for v in _list_versions(self.root):
-            ts = None
-            with open(_log_path(self.root, v)) as f:
-                for line in f:
-                    act = json.loads(line)
-                    if "commit" in act:
-                        ts = int(act["commit"]["ts_us"])
-                        break
-            if ts is None:
-                ts = int(os.path.getmtime(_log_path(self.root, v)) * 1e6)
-            ts = max(ts, prev + 1)
-            out[v] = ts
-            prev = ts
+            prev = out[v] = max(
+                int(_read_log(self.root, v)[0]["commit"]["ts_us"]), prev + 1
+            )
         return out
 
     def version_asof(self, ts_us: int) -> int:
@@ -542,32 +601,32 @@ class LogTable:
         """CHANGE DATA FEED: row-level changes made by commits
         ``start_version..end_version`` (inclusive, Delta
         ``table_changes`` semantics), derived from the copy-on-write
-        log. For each commit the files it REMOVED are the pre-state
-        and the files it ADDED the post-state; a primary-key diff
-        classifies every key as ``insert`` / ``delete`` /
-        ``update_preimage``+``update_postimage``, and rows merely
-        COPIED by the rewrite (same pk, every column null-safe equal)
-        are suppressed — the reader sees logical changes, not physical
-        file churn. Output schema: the END version's logical schema
-        plus ``_change_type`` and ``_commit_version`` (the Delta CDF
-        column contract). Metadata-only commits (rename / drop /
-        add-column) move no data and contribute no rows; all diffs are
-        read under the END version's schema and column mapping, so a
-        rename mid-range never manufactures phantom updates (physical
-        names are stable).
+        log. For each commit the files its own ``remove`` actions name
+        are the pre-state and the files its ``add`` actions name the
+        post-state; a primary-key diff classifies every key as
+        ``insert`` / ``delete`` / ``update_preimage``+
+        ``update_postimage``, and rows merely COPIED by the rewrite
+        (same pk, every column null-safe equal) are suppressed — the
+        reader sees logical changes, not physical file churn. Output
+        schema: the END version's logical schema plus ``_change_type``
+        and ``_commit_version`` (the Delta CDF column contract).
+        Metadata-only commits (rename / drop / add-column) move no data
+        and contribute no rows; all diffs are read under the END
+        version's schema and column mapping, so a rename mid-range
+        never manufactures phantom updates (physical names are stable).
+        A vacuumed file in the range raises ValueError naming it.
 
-        Scale: each commit's diff touches ONLY the files that commit
-        added/removed — CDF cost is proportional to the rewritten
-        data, never the table. The per-commit join runs on
-        range-bucketed files whose key spans align by construction.
-        This is the query-time equivalent of Delta's _change_data
-        files for a format whose merges rewrite whole key-range
-        buckets. Reference parity: the reference's delta export
-        (app/services/export_service.py — created/updated/deleted
-        since a cursor) is this same change classification computed
-        from table state; cf. cdc/event_queries.py:79 (cdc_delta)."""
-        from functools import reduce
-
+        Scale: one log replay (of the end version, for its schema), and
+        each commit's diff reads ONLY the files that commit added/
+        removed — CDF cost is proportional to the rewritten data, never
+        the table. The per-commit join runs on range-bucketed files
+        whose key spans align by construction. This is the query-time
+        equivalent of Delta's _change_data files for a format whose
+        merges rewrite whole key-range buckets. Reference parity: the
+        reference's delta export (app/services/export_service.py —
+        created/updated/deleted since a cursor) is this same change
+        classification computed from table state; cf.
+        cdc/event_queries.py:79 (cdc_delta)."""
         versions = _list_versions(self.root)
         if not versions:
             raise FileNotFoundError(f"no LogTable at {self.root}")
@@ -582,32 +641,20 @@ class LogTable:
         snap_e = self._replay(end)
         schema = self._schema(snap_e)
         pk = snap_e.meta["pk"]
-        phys_schema = self._physical_schema(snap_e)
-        mapping = self._mapping(snap_e)
         cols = [f.name for f in schema.fields]
 
-        def _read_files(paths: list[str]) -> DataFrame:
-            if not paths:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(phys_schema).parquet(
-                *[os.path.join(self.root, p) for p in paths]
-            ).select(*[F.col(mapping[c]).alias(c) for c in cols])
-
         steps: list[DataFrame] = []
-        prev_files = (
-            set()
-            if start_version == versions[0]
-            else set(self._replay(start_version - 1).files)
-        )
         for v in [x for x in versions if start_version <= x <= end]:
-            cur_files = set(self._replay(v).files)
-            removed = sorted(prev_files - cur_files)
-            added = sorted(cur_files - prev_files)
-            prev_files = cur_files
+            actions = _read_log(self.root, v)
+            removed = sorted(a["remove"]["path"] for a in actions if "remove" in a)
+            added = sorted(a["add"]["path"] for a in actions if "add" in a)
             if not removed and not added:
                 continue  # metadata-only commit: no data moved
-            a = _read_files(removed).alias("a")
-            b = _read_files(added).alias("b")
+            for p in removed + added:
+                if not os.path.exists(os.path.join(self.root, p)):
+                    raise ValueError(f"version {v} references vacuumed file {p}")
+            a = self._scan(snap_e, removed).alias("a")
+            b = self._scan(snap_e, added).alias("b")
             j = a.join(b, F.col(f"a.{pk}") == F.col(f"b.{pk}"), "full_outer")
             same = reduce(
                 lambda x, y: x & y,
@@ -627,13 +674,6 @@ class LogTable:
             steps.append(_emit("a", both & ~same, "update_preimage"))
             steps.append(_emit("b", both & ~same, "update_postimage"))
         if not steps:
-            from pyspark.sql.types import (
-                LongType,
-                StringType,
-                StructField,
-                StructType,
-            )
-
             empty = StructType(
                 [*schema.fields,
                  StructField("_change_type", StringType(), False),
@@ -645,46 +685,28 @@ class LogTable:
             result = result.unionAll(s)
         return result
 
-    def merge(
-        self,
-        changes: DataFrame,
-        *,
-        deleted_col: str = "_deleted",
-        max_retries: int = 3,
-    ) -> tuple[int, dict]:
+    def merge(self, changes: DataFrame) -> tuple[int, dict]:
         """Copy-on-write MERGE by primary key: rows in ``changes`` with
-        ``deleted_col`` true delete their key; others upsert. Returns
+        ``_deleted`` true delete their key; others upsert. Returns
         (new_version, stats) where stats records the file-pruning
         evidence: how many live files the batch's key range touched.
 
-        Retries the whole read-rewrite-commit cycle on a losing race
-        whose winner touched disjoint files would be safe to stack, but
-        a true overlap raises CommitConflict to the caller."""
+        A lost commit race whose winner touched neither our files nor
+        our key range stacks on top of it; a real overlap re-runs the
+        read-rewrite-commit cycle on the new snapshot, and after
+        ``_MERGE_ATTEMPTS`` cycles raises CommitConflict to the caller."""
         # Materialize the change batch ONCE: a rewrite reads it twice
         # (anti-join keys, upserts) and a commit retry again, and the
         # batch is the DELTA, so its localCheckpoint is the cheap side;
         # it also freezes non-deterministic sources. Its key range is
         # an Observation on that checkpoint job: pruning runs no job.
         pk = self._replay().meta["pk"]
-        key_range = Observation()
+        observed = Observation()
         changes = changes.observe(
-            key_range, F.min(pk).alias("lo"), F.max(pk).alias("hi")
+            observed, F.min(pk).alias("lo"), F.max(pk).alias("hi")
         ).localCheckpoint(eager=True)
-        return self._merge_pinned(
-            changes, key_range.get, deleted_col=deleted_col,
-            max_retries=max_retries,
-        )
-
-    def _merge_pinned(
-        self,
-        changes: DataFrame,
-        key_range: dict,
-        *,
-        deleted_col: str,
-        max_retries: int,
-    ) -> tuple[int, dict]:
-        lo, hi = key_range["lo"], key_range["hi"]
-        for _ in range(max_retries):
+        lo, hi = observed.get["lo"], observed.get["hi"]
+        for _ in range(_MERGE_ATTEMPTS):
             snap = self._replay()
             pk = snap.meta["pk"]
             if lo is None:
@@ -694,26 +716,11 @@ class LogTable:
                     "rows_rewritten": 0,
                 }
             touched = {
-                p: a
-                for p, a in snap.files.items()
-                if not (a["max_pk"] < lo or a["min_pk"] > hi)
+                p: a for p, a in snap.files.items() if _overlaps(a, lo, hi)
             }
-            schema = self._schema(snap)
-            mapping = self._mapping(snap)
-            merged = changes.filter(~F.col(deleted_col)).drop(deleted_col)
+            merged = changes.filter(~F.col("_deleted")).drop("_deleted")
             if touched:  # else an append: nothing survives or is deleted
-                # scan physical names, alias back to the logical schema
-                base = self.spark.read.schema(
-                    self._physical_schema(snap)
-                ).parquet(
-                    *[os.path.join(self.root, p) for p in sorted(touched)]
-                ).select(
-                    *[
-                        F.col(mapping[f.name]).alias(f.name)
-                        for f in schema.fields
-                    ]
-                )
-                survivors = base.join(
+                survivors = self._scan(snap, sorted(touched)).join(
                     F.broadcast(changes.select(pk)), pk, "left_anti"
                 )
                 # allowMissingColumns: after add-only schema evolution, a
@@ -724,12 +731,13 @@ class LogTable:
             k = snap.meta.get("bucket_k", 1)
             actions = [{"remove": {"path": p}} for p in sorted(touched)]
             adds = self._write_files(
-                self._to_physical(merged, snap), mapping[pk], k
+                self._to_physical(merged, snap), self._mapping(snap)[pk], k
             )
             actions += [{"add": a} for a in adds]
             try:
                 v = self._commit(
-                    actions, snap.version, touched=set(touched)
+                    actions, snap.version, touched=set(touched),
+                    key_range=(lo, hi),
                 )
             except CommitConflict:
                 # winner overlapped us: our staged files are garbage
@@ -742,19 +750,18 @@ class LogTable:
                 "files_touched": len(touched),
                 "rows_rewritten": sum(a["rows"] for a in touched.values()),
             }
-        raise CommitConflict(f"merge lost {max_retries} full cycles")
+        raise CommitConflict(f"merge lost {_MERGE_ATTEMPTS} full cycles")
 
-    def optimize(self, target_files: int | None = None) -> tuple[int, dict]:
+    def optimize(self) -> tuple[int, dict]:
         """Compaction as a COMMITTED action: rewrite the live file set
-        into ``target_files`` range buckets (default: the table's
-        configured n_files — re-coalescing the extra bucket files that
-        out-of-range inserts accumulate). Readers never see a partial
-        state: old files stay live until the single commit swaps the
-        whole set, and time travel to pre-optimize versions still works
-        until vacuum."""
+        into the table's configured n_files range buckets, re-coalescing
+        the extra bucket files that out-of-range inserts accumulate.
+        Readers never see a partial state: old files stay live until
+        the single commit swaps the whole set, and time travel to
+        pre-optimize versions still works until vacuum."""
         snap = self._replay()
         pk = snap.meta["pk"]
-        n_out = target_files or snap.meta.get("n_files", 8)
+        n_out = snap.meta.get("n_files", 8)
         df = self.read(snap.version)
         # every live add-action holds its file's exact max_pk: the
         # bucket width needs no scan of the table
@@ -780,55 +787,6 @@ class LogTable:
             "files_after": len(adds),
         }
 
-    def add_columns(self, new_schema) -> int:
-        """SCHEMA EVOLUTION (add-only): commit a widened schema. Old
-        data files stay as-is; reads reconcile by filling absent
-        columns with nulls (Spark's parquet reader does this given the
-        table-level schema), so no data rewrite happens — the Delta
-        add-column semantics. Dropping or retyping columns is refused:
-        that would silently change the meaning of immutable files."""
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        snap = self._replay()
-        old = StructType.fromJson(_json.loads(snap.meta["schema"]))
-        for f in old.fields:
-            match = [g for g in new_schema.fields if g.name == f.name]
-            if not match or match[0].dataType != f.dataType:
-                raise ValueError(
-                    f"schema evolution is add-only: column {f.name!r} "
-                    "missing or retyped in the new schema"
-                )
-        if len(new_schema.fields) == len(old.fields):
-            return snap.version
-        # new logical columns get physical names that NEVER collide
-        # with any physical name ever allocated — re-adding a dropped
-        # column must not resurrect the dropped column's old data
-        mapping = dict(self._mapping(snap))
-        all_physical = set(snap.meta.get("all_physical", [])) | set(
-            mapping.values()
-        )
-        for f in new_schema.fields:
-            if f.name in mapping:
-                continue
-            phys = f.name
-            if phys in all_physical:
-                phys = f"{f.name}_{uuid.uuid4().hex[:8]}"
-            mapping[f.name] = phys
-            all_physical.add(phys)
-        actions = [
-            {
-                "meta": {
-                    **snap.meta,
-                    "schema": new_schema.json(),
-                    "column_mapping": mapping,
-                    "all_physical": sorted(all_physical),
-                }
-            }
-        ]
-        return self._commit(actions, snap.version, touched=set())
-
     def vacuum(self) -> list[str]:
         """Delete data files not referenced by the LATEST version.
         After vacuum, time travel to versions needing those files
@@ -842,8 +800,6 @@ class LogTable:
         readers but accumulate; the round-9 advice item). Only
         artifacts older than TMP_SWEEP_HORIZON_S go, so an in-flight
         writer's milliseconds-old temp file is never touched."""
-        import shutil
-
         snap = self._replay()
         live = set(snap.paths)
         # every path that ever appeared in a committed add-action: such
@@ -854,14 +810,9 @@ class LogTable:
         # they age past TMP_SWEEP_HORIZON_S (the r10 advice item).
         ever_referenced: set[str] = set(live)
         for v in _list_versions(self.root):
-            try:
-                with open(_log_path(self.root, v)) as f:
-                    for line in f:
-                        action = json.loads(line)
-                        if "add" in action:
-                            ever_referenced.add(action["add"]["path"])
-            except OSError:
-                pass
+            ever_referenced.update(
+                a["add"]["path"] for a in _read_log(self.root, v) if "add" in a
+            )
         removed = []
         cutoff = time.time() - TMP_SWEEP_HORIZON_S
         for name in sorted(os.listdir(self.root)):

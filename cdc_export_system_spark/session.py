@@ -75,6 +75,28 @@ def _warehouse_dir() -> str:
     return path
 
 
+_scratch_root: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for one query's scratch files (a table root, a
+    stream's feed, sink and checkpoint). All of them live under one
+    per-process root that is removed at interpreter exit, as the
+    warehouse dir is, so repeated runs leave nothing in the temp dir."""
+    global _scratch_root
+    import tempfile
+
+    if _scratch_root is None:
+        import atexit
+        import shutil
+
+        _scratch_root = tempfile.mkdtemp(
+            prefix=f"cdc_spark_scratch_{os.getpid()}_"
+        )
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
+
+
 def _pin_jvm_utc(spark: SparkSession) -> None:
     """Pin the JVM DEFAULT time zone to UTC (runtime-settable via py4j).
 

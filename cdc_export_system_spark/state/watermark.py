@@ -48,6 +48,7 @@ from cdc_export_system_spark.schemas import WATERMARKS_SCHEMA
 
 _CURRENT = "CURRENT"
 _TS = TimestampType()
+_UPSERT_ATTEMPTS = 20  # commit elections one upsert may lose before raising
 
 # consumer_id -> [last_exported_at_us, updated_at_us]
 Table = dict[str, list[int]]
@@ -133,12 +134,7 @@ class WatermarkStore:
 
     # -- write path ------------------------------------------------------
 
-    def upsert(
-        self,
-        consumer_id: str,
-        last_exported_at: datetime,
-        max_retries: int = 20,
-    ) -> None:
+    def upsert(self, consumer_id: str, last_exported_at: datetime) -> None:
         """Insert-or-update one consumer row (reference watermark.py:11-26)
         through the CAS chain: read head -> merge -> publish seq+1 via
         link election; on losing the election, RE-READ and re-merge so a
@@ -151,7 +147,7 @@ class WatermarkStore:
         otherwise retries from a fresh head."""
         now = datetime.now(timezone.utc).replace(tzinfo=None)
         row = [_TS.toInternal(last_exported_at), _TS.toInternal(now)]
-        for attempt in range(max_retries):
+        for attempt in range(_UPSERT_ATTEMPTS):
             seq, table = self._head()
             table[consumer_id] = row
             if (
@@ -161,7 +157,7 @@ class WatermarkStore:
                 return
             time.sleep(0.01 * (attempt % 5 + 1))
         raise RuntimeError(
-            f"watermark upsert for {consumer_id!r} lost {max_retries} "
+            f"watermark upsert for {consumer_id!r} lost {_UPSERT_ATTEMPTS} "
             "commit elections"
         )
 

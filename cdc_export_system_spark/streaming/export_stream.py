@@ -28,13 +28,12 @@ write, so only the per-batch (rows, max_ts) pair reaches the driver.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from cdc_export_system_spark.io.csv_sink import write_users_csv
 from cdc_export_system_spark.registry import register
+from cdc_export_system_spark.session import scratch_dir
 
 # Fixed seed watermark: mid-range of the testdata's event horizon. The
 # continuous export ships everything strictly after this instant.
@@ -67,9 +66,7 @@ def stream_export_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_export_system_spark.session import ensure_engine_conf
 
     ensure_engine_conf(spark)
-    tag = f"{abs(hash((spark.sparkContext.applicationId, sf_dir, 'csvexp'))):x}"
-    base = os.path.join(tempfile.gettempdir(), f"stream_csvexp_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("stream_csvexp-")
     feed = os.path.join(base, "feed")
     out_dir = os.path.join(base, "exports")
     os.makedirs(out_dir)

@@ -24,30 +24,14 @@ here without coupling this op to the txn module.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from cdc_export_system_spark.io.sources import load_table
 from cdc_export_system_spark.registry import register
-
-_ROOTS: list[str] = []
-
-
-@atexit.register
-def _sweep_roots() -> None:
-    for r in _ROOTS:
-        shutil.rmtree(r, ignore_errors=True)
-
-
-def _new_root() -> str:
-    root = tempfile.mkdtemp(prefix="mvstream-")
-    _ROOTS.append(root)
-    return root
-
+from cdc_export_system_spark.session import scratch_dir
 
 _N_BATCHES = 3
 
@@ -86,7 +70,7 @@ def stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"
     )
-    stage = _new_root()
+    stage = scratch_dir("mvstream-")
     feed_dir = os.path.join(stage, "feed")
     ckpt_dir = os.path.join(stage, "ckpt")
     os.makedirs(feed_dir)

@@ -148,12 +148,9 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference app/services/exports.py:110-127 — the consumer contract
     is at-least-once with a bounded replay window).
 
-    Scratch handling mirrors stream_cdc_scd2: deterministic
-    per-(session, sf_dir) dir, cleared on the next invocation."""
-    import shutil
-    import tempfile
-
-    from cdc_export_system_spark.session import ensure_engine_conf
+    Scratch is a ``session.scratch_dir``, removed at interpreter
+    exit."""
+    from cdc_export_system_spark.session import ensure_engine_conf, scratch_dir
 
     ensure_engine_conf(spark)  # readStream path: UTC/nanos not yet applied
     schema = (
@@ -174,9 +171,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    tag = f"{abs(hash((spark.sparkContext.applicationId, sf_dir, 'dd'))):x}"
-    base = os.path.join(tempfile.gettempdir(), f"stream_dd_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("stream_dd-")
     out_dir = os.path.join(base, "out")
     q = (
         deduped.writeStream.format("parquet")
@@ -278,11 +273,7 @@ def stream_window_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: dedup state is |users active per open hour| keys, evicted
     by the watermark; the same query on a live bus just swaps the
     trigger."""
-    import os
-    import shutil
-    import tempfile
-
-    from cdc_export_system_spark.session import ensure_engine_conf
+    from cdc_export_system_spark.session import ensure_engine_conf, scratch_dir
 
     ensure_engine_conf(spark)
     schema = (
@@ -307,9 +298,7 @@ def stream_window_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["hr", "user_id"])
         .select(F.col("hr").alias("window_start"), "user_id")
     )
-    tag = f"{abs(hash((spark.sparkContext.applicationId, sf_dir, 'uu'))):x}"
-    base = os.path.join(tempfile.gettempdir(), f"stream_uu_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("stream_uu-")
     out_dir = os.path.join(base, "out")
     q = (
         agg.writeStream.format("parquet")

@@ -114,22 +114,16 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     back. Same oracle constant as cdc_scd2_history: however the source
     splits the feed into micro-batches, the converged table must equal
     the batch recomputation bit-for-bit (the multi-batch split is pinned
-    in tests/test_streaming.py). Scratch is a deterministic
-    per-(session, sf_dir) directory, cleared on the next invocation —
-    bounded to one state copy, never an unbounded /tmp leak."""
-    import tempfile
-
-    from cdc_export_system_spark.session import ensure_engine_conf
+    in tests/test_streaming.py). Scratch is a ``session.scratch_dir``,
+    removed at interpreter exit."""
+    from cdc_export_system_spark.session import ensure_engine_conf, scratch_dir
 
     # this op reads via readStream directly (no load_table), so the
     # UTC/nanos runtime confs must be applied here — a non-UTC driver
     # session would otherwise shift every interval timestamp (pinned in
     # tests/test_streaming.py::test_stream_cdc_scd2_hostile_timezone)
     ensure_engine_conf(spark)
-    tag = f"{abs(hash((spark.sparkContext.applicationId, sf_dir))):x}"
-    base = os.path.join(tempfile.gettempdir(), f"scd2_stream_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = scratch_dir("scd2_stream-")
     # declared schema — same pattern as stream_stateful_profile
     stream = (
         spark.readStream.schema(

@@ -418,7 +418,7 @@ def test_watermark_commit_descriptive_error_without_hardlinks(
     # HardLinksUnsupported — never burn the retry budget and report a
     # misleading 'lost N commit elections' RuntimeError
     with pytest.raises(HardLinksUnsupported, match="hard-link support"):
-        store.upsert("c1", NOW, max_retries=20)
+        store.upsert("c1", NOW)
 
 
 def test_cdf_export_matches_reference_classification(spark, tmp_path):

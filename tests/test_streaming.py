@@ -540,7 +540,7 @@ def test_stream_dedup_watermark_drops_cross_batch_redelivery(spark, tmp_path):
     assert len(glob.glob(f"{src_dir}/*.parquet")) >= 2  # really two batches
 
 
-def test_stream_export_csv_bytes_match_batch_export(spark):
+def test_stream_export_csv_bytes_match_batch_export(spark, monkeypatch):
     """The continuous CSV export must ship exactly the batch-export row
     set under the byte contract: the union of all per-batch CSVs equals
     the one-shot strictly-after-seed query (ISO timestamps, no
@@ -548,17 +548,25 @@ def test_stream_export_csv_bytes_match_batch_export(spark):
     ordered by event time."""
     import csv as _csv
     import glob as _glob
-    import tempfile
 
     from cdc_export_system_spark.io.sources import load_table
+    from cdc_export_system_spark.streaming import export_stream
     from cdc_export_system_spark.streaming.export_stream import (
         EXPORT_SEED_WM, stream_export_csv,
     )
     from tests.conftest import SF_DIR
 
+    made: list[str] = []  # the export's scratch dir, recorded as it is made
+
+    def recording_scratch_dir(prefix):
+        made.append(real_scratch_dir(prefix))
+        return made[-1]
+
+    real_scratch_dir = export_stream.scratch_dir
+    monkeypatch.setattr(export_stream, "scratch_dir", recording_scratch_dir)
     summary = stream_export_csv(spark, SF_DIR).first()
-    tag = f"{abs(hash((spark.sparkContext.applicationId, SF_DIR, 'csvexp'))):x}"
-    out_dir = os.path.join(tempfile.gettempdir(), f"stream_csvexp_{tag}", "exports")
+    (base,) = made
+    out_dir = os.path.join(base, "exports")
     files = sorted(_glob.glob(os.path.join(out_dir, "export_*.csv")))
     assert len(files) == summary["n_csv_files"]
 

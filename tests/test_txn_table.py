@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +21,7 @@ from cdc_export_system_spark.io.txn_table import (
     CommitConflict,
     LogTable,
     _log_path,
+    _read_log,
 )
 
 
@@ -136,12 +138,12 @@ def test_merge_retries_after_disjoint_concurrent_commit(spark, tmp_path):
     real_commit = LogTable._commit
     fired = {"done": False}
 
-    def racy_commit(self, actions, read_version, touched, max_retries=20):
+    def racy_commit(self, *args, **kwargs):
         if not fired["done"]:
             fired["done"] = True
             with open(_log_path(self.root, 2), "w") as f:
                 f.write("")  # empty disjoint commit wins the race
-        return real_commit(self, actions, read_version, touched, max_retries)
+        return real_commit(self, *args, **kwargs)
 
     LogTable._commit = racy_commit
     try:
@@ -150,6 +152,108 @@ def test_merge_retries_after_disjoint_concurrent_commit(spark, tmp_path):
         LogTable._commit = real_commit
     assert v == 3
     assert dict((r["k"], r["v"]) for r in t.read().collect())[3] == 7
+
+
+def test_concurrent_append_of_the_same_key_conflicts(spark, tmp_path):
+    """Two merges of the same NEW key both append (neither touches a
+    live file). Writer A's merge commits while writer B is inside its
+    own commit: A's added file overlaps B's key range, so B must
+    conflict and re-run on A's snapshot, not stack a second row for
+    the key on top (Delta's concurrent-append rule)."""
+    t = _mk(spark, tmp_path)
+    real_commit = LogTable._commit
+    fired = {"done": False}
+
+    def racy_commit(self, *args, **kwargs):
+        if not fired["done"]:
+            fired["done"] = True
+            LogTable(spark, self.root).merge(_batch(spark, [(1000, 1, False)]))
+        return real_commit(self, *args, **kwargs)
+
+    LogTable._commit = racy_commit
+    try:
+        v, _ = t.merge(_batch(spark, [(1000, 2, False)]))
+    finally:
+        LogTable._commit = real_commit
+    assert v == 3
+    assert t.read().count() == 65
+    assert [r["v"] for r in t.read().filter(F.col("k") == 1000).collect()] == [2]
+
+
+NON_INTEGRAL_PKS = {  # pk type name -> expression over spark.range's id
+    "date": "DATE_ADD(DATE'2020-01-01', CAST(id AS INT))",
+    "string": "CAST(id AS STRING)",
+    "double": "CAST(id AS DOUBLE)",
+    "decimal(10,0)": "CAST(id AS DECIMAL(10,0))",
+}
+
+
+@pytest.mark.parametrize("type_name", sorted(NON_INTEGRAL_PKS))
+def test_create_rejects_non_integral_pk(spark, tmp_path, type_name):
+    """Bucketing and file stats are integer arithmetic on the pk: any
+    other pk type fails at once, naming the column and its type, with
+    no Spark job run and no log directory left behind."""
+    import uuid
+
+    from tests.test_csv_sink import _group_jobs
+
+    df = spark.range(8).selectExpr(f"{NON_INTEGRAL_PKS[type_name]} AS k", "id AS v")
+    root = tmp_path / "t"
+    sc = spark.sparkContext
+    group = f"create-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=rf"'k'.*{re.escape(type_name)}"):
+            LogTable.create(spark, str(root), df, "k")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert _group_jobs(sc, group) == 0
+    assert not root.exists()
+
+
+def test_commit_actions_equal_replay_diff(spark, tmp_path):
+    """changes() reads each commit's own add/remove actions; the older
+    definition diffed the replayed file sets of v-1 and v. Both must
+    agree on every version of a history with rewrites, an append,
+    metadata commits and a compaction."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    t = _mk(spark, tmp_path)
+    t.merge(_batch(spark, [(3, 999, False), (5, None, True)]))  # rewrite
+    t.merge(_batch(spark, [(100, 1, False)]))  # append
+    t.rename_column("v", "val")
+    old = t._schema(t._replay())
+    t.add_columns(StructType(old.fields + [StructField("w", LongType())]))
+    t.merge(
+        spark.createDataFrame(
+            [(7, 70, 1, False), (101, 2, 2, False)],
+            "k long, val long, w long, _deleted boolean",
+        )
+    )
+    t.optimize()
+    assert len(t.history()) == 7
+    prev: set[str] = set()
+    for v in t.history():
+        cur = set(t._replay(v).files)
+        actions = _read_log(t.root, v)
+        assert "commit" in actions[0]
+        assert {a["add"]["path"] for a in actions if "add" in a} == cur - prev
+        assert {a["remove"]["path"] for a in actions if "remove" in a} == (
+            prev - cur
+        )
+        prev = cur
+
+
+def test_changes_over_vacuumed_version_fails_fast(spark, tmp_path):
+    """A commit whose removed file was vacuumed can no longer produce
+    its pre-images: changes() raises ValueError naming that file
+    instead of returning a partial feed."""
+    t = _mk(spark, tmp_path)
+    t.merge(_batch(spark, [(3, 999, False)]))
+    (gone,) = [a["remove"]["path"] for a in _read_log(t.root, 2) if "remove" in a]
+    assert gone in t.vacuum()
+    with pytest.raises(ValueError, match=gone):
+        t.changes(2, 2)
 
 
 def test_vacuum_then_time_travel_fails_fast(spark, tmp_path):
@@ -295,6 +399,8 @@ def test_concurrent_writers_serialize_without_loss(spark, tmp_path):
     # exactly once — no lost or duplicated commit under the race)
     hist = final.history()
     assert hist == list(range(hist[0], hist[0] + n_threads * n_merges + 1))
+    # the dict below would hide a key committed twice
+    assert final.read().count() == 64
     rows = {r["k"]: r["v"] for r in final.read().collect()}
     assert len(rows) == 64
     for k, v in rows.items():
