@@ -27,7 +27,7 @@ is NUM_PERM longs/doc (~256 B/doc), 40 GB per 100 B docs — fine to shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_export_system_spark.io.sources import load_table_fanned as load_table
 from cdc_export_system_spark.registry import register
@@ -152,73 +152,6 @@ def minhash_signature(docs: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
     )
 
 
-def _band_digest(band: int, rows_per_band: int = ROWS_PER_BAND) -> Column:
-    """Pack the band's signature rows into ONE bigint: with m < P < 2^31
-    and rows_per_band = 2, m_a * P + m_b < 2^62 — a lossless (injective)
-    digest, so bucket membership is EXACTLY row-equality, and the bucket
-    shuffle keys on 8 bytes instead of a 32-byte md5 hex string (which
-    also cost one md5 per doc-band). The digest never leaves the plan —
-    the op's output is candidate pairs — so the oracle's md5 form and
-    this packed form group identically."""
-    assert rows_per_band == 2, "64-bit packing holds for 2 rows/band"
-    a = F.col(f"m{band * rows_per_band}")
-    b = F.col(f"m{band * rows_per_band + 1}")
-    return a * F.lit(P).cast("bigint") + b
-
-
-def lsh_candidates(
-    sig: DataFrame,
-    num_bands: int = NUM_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) sharing >=1 band digest.
-    ``num_bands``/``rows_per_band`` tune the LSH S-curve (more bands =
-    higher recall at lower precision); the registered queries bind the
-    oracle-matched defaults (the signature must carry
-    num_bands * rows_per_band columns).
-
-    Pairs are generated inside each (band, digest) bucket — groupBy +
-    collect_set + in-array combination — instead of self-joining the band
-    table, which would execute the entire upstream signature pipeline
-    twice and shuffle it both times. Bucket fan-out is bounded: beyond
-    true near-dups, digest collisions are ~2^-64, so collect_set stays
-    tiny; a pathological poison bucket (identical boilerplate docs) is the
-    dedup signal itself, not skew to engineer around.
-    """
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    _band_digest(b, rows_per_band).alias("digest"),
-                )
-                for b in range(num_bands)
-            ])
-        ).alias("bd"),
-    ).select("doc_id", "bd.band", "bd.digest")
-    buckets = (
-        bands.groupBy("band", "digest")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    return (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    """
-                    flatten(transform(ids, (x, i) ->
-                        transform(slice(ids, i + 2, size(ids) - i - 1),
-                                  y -> struct(x AS doc_a, y AS doc_b))))
-                    """
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-
-
 def _sql_signature_cte() -> str:
     """DuckDB CTEs mirroring minhash_signature()."""
     mins = ",\n               ".join(
@@ -282,8 +215,9 @@ def _spark_sig_cte(src: str) -> str:
 
 
 def _spark_bands_cte() -> str:
-    # packed-bigint digest, same contract as _band_digest (injective for
-    # m < P, 2 rows/band; never leaves the plan)
+    # packed-bigint digest m_a * P + m_b: injective for m < P < 2^31 and
+    # 2 rows/band, so bucket membership is exactly row-equality, and it
+    # never leaves the plan (the oracle's md5 form groups identically)
     assert ROWS_PER_BAND == 2, "64-bit packing holds for 2 rows/band"
     structs = ", ".join(
         f"named_struct('band', {b}, 'digest', "

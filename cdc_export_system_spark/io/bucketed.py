@@ -11,7 +11,7 @@ time for zero shuffles on every subsequent read — the right trade for
 tables joined more than once.
 
 This module is the ingest path: it registers parquet star tables as
-bucketed managed tables (idempotent, keyed by sf_dir) and exposes the
+bucketed managed tables (idempotent per source version) and exposes the
 joined query. The plan pin lives in tests/test_bucketed_join.py: the
 bucketed join's physical plan must contain NO Exchange operator.
 
@@ -25,33 +25,45 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_export_system_spark.io.sources import load_table
+from cdc_export_system_spark.io.sources import load_table, source_version
 
 N_BUCKETS = 8
 
 
-def _table_name(sf_dir: str, name: str) -> str:
+def _table_name(sf_dir: str, source: str, name: str) -> str:
+    # keyed by the source's version: a rewritten source gets a new table
     tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    return f"bkt_{name}_{tag}"
+    return f"bkt_{name}_{tag}_{source_version(sf_dir, source)}"
+
+
+def ensure_tables(
+    spark: SparkSession, tables: list[str], build: Callable[[], None]
+) -> None:
+    """Run ``build``, which saves every one of ``tables``, unless all
+    are in the session catalog. That catalog is in-memory: a stopped
+    session may have left a managed location without its entry, which
+    saveAsTable refuses to write over, so those are removed first."""
+    if all(spark.catalog.tableExists(t) for t in tables):
+        return
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for t in tables:
+        shutil.rmtree(os.path.join(warehouse, t.lower()), ignore_errors=True)
+    build()
 
 
 def ensure_bucketed(
     spark: SparkSession, sf_dir: str, name: str, key: str, n_buckets: int = N_BUCKETS
 ) -> str:
     """Register `{sf_dir}/{name}.parquet` as a managed table bucketed and
-    sorted by `key`; idempotent per (sf_dir, table). Returns the table name."""
-    tbl = _table_name(sf_dir, name)
-    if not spark.catalog.tableExists(tbl):
-        # The default catalog is in-memory: a previous session may have
-        # left the managed location behind without the table entry.
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(warehouse, tbl.lower())
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
+    sorted by `key`; idempotent per source version. Returns its name."""
+    tbl = _table_name(sf_dir, name, name)
+
+    def build() -> None:
         (
             load_table(spark, sf_dir, name)
             # cluster rows into their buckets first: one file per bucket
@@ -64,6 +76,8 @@ def ensure_bucketed(
             .format("parquet")
             .saveAsTable(tbl)
         )
+
+    ensure_tables(spark, [tbl], build)
     return tbl
 
 

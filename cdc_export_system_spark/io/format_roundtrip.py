@@ -3,8 +3,8 @@
 The reference's only interchange format is headered CSV (reference
 ``app/services/exports.py:20-67``); a complete engine must also *read*
 it back — and JSONL, the other lingua franca of training-data pipelines.
-Each op materializes the ``orders`` table to the format once (driver-side
-temp dir, `_SUCCESS`-marked, keyed by sf_dir), then reads it back with an
+Each op materializes the ``orders`` table to the format once per process
+and source version (``io.sources.derived_dir``), then reads it back with an
 **explicit schema** (never inference — schema inference is a full extra
 pass over 100 TB) and runs an aggregate the oracle reproduces from the
 parquet originals. A value-hash match proves the writer→reader loop is
@@ -19,12 +19,9 @@ schema keeps the scan single-pass.
 
 from __future__ import annotations
 
-import os
-import tempfile
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark.sql import DataFrame, SparkSession
-
-from cdc_export_system_spark.io.sources import load_table
+from cdc_export_system_spark.io.sources import derived_dir, load_table
 from cdc_export_system_spark.registry import register, dsum, sql_dsum
 
 # Microsecond-precision writer/reader format: loses nothing the testdata
@@ -39,37 +36,25 @@ ORDERS_AGG_ORACLE = f"""
 """
 
 
-def _materialize(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    """Write orders once per (sf_dir, fmt) to a temp dir; idempotent via
-    Spark's own _SUCCESS marker."""
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "cdc_spark_fmt", f"{tag}_{fmt}")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        df = load_table(spark, sf_dir, "orders")
-        w = df.write.mode("overwrite").option("timestampFormat", TS_FMT)
-        if fmt == "csv":
-            w.option("header", True).csv(base)
-        elif fmt == "orc":
-            w.orc(base)
-        else:
-            w.json(base)
-    return base
+# writer and reader options per format; ORC stores typed timestamps
+_OPTIONS = {
+    "csv": {"timestampFormat": TS_FMT, "header": True},
+    "json": {"timestampFormat": TS_FMT},
+    "orc": {},
+}
 
 
 def _read_back(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
-    path = _materialize(spark, sf_dir, fmt)
+    opts = _OPTIONS[fmt]
+    path = derived_dir(
+        spark, sf_dir, "orders", fmt,
+        lambda df, p: df.write.format(fmt).options(**opts).save(p),
+    )
     schema = load_table(spark, sf_dir, "orders").schema
-    r = spark.read.schema(schema).option("timestampFormat", TS_FMT)
-    if fmt == "csv":
-        return r.option("header", True).csv(path)
-    if fmt == "orc":
-        return r.orc(path)
-    return r.json(path)
+    return spark.read.schema(schema).format(fmt).options(**opts).load(path)
 
 
 def _orders_agg(df: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         dsum(F.col("o_totalprice"), "total_price"),
@@ -124,22 +109,15 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: mergeSchema footer-merges every file's schema — at
     warehouse scale pin the table schema in a catalog and evolve it
     there instead; this op proves the reader semantics."""
-    import os
-    import tempfile
-
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "cdc_spark_fmt", f"{tag}_evo")
-    o = load_table(spark, sf_dir, "orders")
-    gen1 = os.path.join(base, "gen1")
-    gen2 = os.path.join(base, "gen2")
-    from pyspark.sql import functions as F
-
-    if not os.path.exists(os.path.join(gen1, "_SUCCESS")):
-        o.filter(F.col("o_orderkey") % 2 == 0).drop("o_orderpriority").write.mode(
-            "overwrite"
-        ).parquet(gen1)
-    if not os.path.exists(os.path.join(gen2, "_SUCCESS")):
-        o.filter(F.col("o_orderkey") % 2 == 1).write.mode("overwrite").parquet(gen2)
+    parity = F.col("o_orderkey") % 2
+    gen1 = derived_dir(
+        spark, sf_dir, "orders", "gen1",
+        lambda o, p: o.filter(parity == 0).drop("o_orderpriority").write.parquet(p),
+    )
+    gen2 = derived_dir(
+        spark, sf_dir, "orders", "gen2",
+        lambda o, p: o.filter(parity == 1).write.parquet(p),
+    )
     merged = spark.read.option("mergeSchema", True).parquet(gen1, gen2)
     return merged.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -12,13 +12,14 @@ This module is that layout decision as an operator:
   days, no small-file spray (without the repartition, every task writes
   a file into every day's directory — task×day files is the classic
   partitioned-sink mistake).
-* ``sink_parquet_partitioned`` (registered) — writes (idempotently,
-  keyed by sf_dir), reads back a one-week slice, and aggregates; the
-  oracle computes the same week from the original parquet, proving the
-  layout round-trips values exactly. tests/test_partitioned_sink.py
-  pins the plan: PartitionFilters carries the date bounds, the
-  pushed-down data filter set is empty (the partition column does the
-  work), and the directory layout contains one subdir per day.
+* ``sink_parquet_partitioned`` (registered) — writes (once per
+  process and source version, ``io.sources.derived_dir``), reads back
+  a one-week slice, and aggregates; the oracle computes the same week
+  from the original parquet, proving the layout round-trips values
+  exactly. tests/test_partitioned_sink.py pins the plan:
+  PartitionFilters carries the date bounds, the pushed-down data filter
+  set is empty (the partition column does the work), and the directory
+  layout contains one subdir per day.
 
 Scale: daily partitions bound partition count to |days| (3.7k/decade —
 fine for any metastore); the in-partition file count is the
@@ -28,14 +29,12 @@ is the documented refinement when one day outgrows a writer wave.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
-import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_export_system_spark.io.sources import load_table
+from cdc_export_system_spark.io.sources import derived_dir
 from cdc_export_system_spark.registry import register, sql_dsum, dsum
 
 # one-week probe slice: matches the testdata's first full week
@@ -57,60 +56,26 @@ def partitioned_write(df: DataFrame, path: str) -> None:
     )
 
 
-def _source_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the events source (relpath/size/mtime of
-    every file): the cache key must change when the source parquet
-    changes, or a stale partitioned copy would silently serve both the
-    operator and the oracle comparison."""
-    src = os.path.join(sf_dir, "events.parquet")
-    parts: list[str] = []
-    if os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
-            _dirs.sort()  # deterministic walk order across filesystems
-            for fn in sorted(files):
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                parts.append(
-                    f"{os.path.relpath(p, src)}:{st.st_size}:{st.st_mtime_ns}"
-                )
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"events.parquet:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
-
-
-def _materialize(spark: SparkSession, sf_dir: str) -> str:
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    root = os.path.join(tempfile.gettempdir(), "cdc_spark_part")
-    base = os.path.join(root, f"{tag}-{_source_fingerprint(sf_dir)}")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        # write-then-rename: the sink lands in a session-unique temp dir
-        # and moves into place atomically, so two concurrent sessions
-        # never interleave writers inside the same directory — the loser
-        # of the rename race just discards its copy
-        os.makedirs(root, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix=f".{tag}-build-", dir=root)
-        staged = os.path.join(tmp, "data")
-        partitioned_write(load_table(spark, sf_dir, "events"), staged)
-        try:
-            os.rename(staged, base)
-        except OSError:
-            if not os.path.exists(os.path.join(base, "_SUCCESS")):
-                raise
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        # prune superseded copies: same source tag, older fingerprint —
-        # without this every source change leaks a full partitioned copy
-        prefix = f"{tag}-"
-        for entry in os.listdir(root):
-            stale = os.path.join(root, entry)
-            if (
-                entry.startswith(prefix)
-                and stale != base
-                and not entry.startswith(".")
-            ):
-                shutil.rmtree(stale, ignore_errors=True)
-    return base
+def _per_type(
+    spark: SparkSession, sf_dir: str, pick: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Event count and value sum per type over the rows ``pick`` keeps
+    of the day-partitioned copy of events."""
+    base = derived_dir(spark, sf_dir, "events", "by_day", partitioned_write)
+    if not any(d.startswith("event_date=") for d in os.listdir(base)):
+        # zero-row source: the writer leaves only _SUCCESS, and a
+        # parquet read of a partitionless dir cannot infer a schema
+        return spark.createDataFrame(
+            [], "event_type string, n_events bigint, total_value double"
+        )
+    return (
+        pick(spark.read.parquet(base))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum(F.col("value"), "total_value"),
+        )
+    )
 
 
 @register(
@@ -127,33 +92,21 @@ def _materialize(spark: SparkSession, sf_dir: str) -> str:
 )
 def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip through the date-partitioned layout: write events
-    partitioned by event_date (once per sf_dir), read back ONE WEEK via
-    a partition-column predicate — pruned at planning time, the
-    excluded day-directories (23 of 30 on the testdata) are never
-    scanned (plan pin in
-    tests/test_partitioned_sink.py) — and aggregate per type. The
-    oracle computes the identical week from the original unpartitioned
-    parquet, so a hash match proves the partitioned layout loses
-    nothing (timestamps keep microseconds; the derived partition column
-    round-trips as a real DATE)."""
-    base = _materialize(spark, sf_dir)
-    if not any(d.startswith("event_date=") for d in os.listdir(base)):
-        # zero-row source: the writer leaves only _SUCCESS, and a
-        # parquet read of a partitionless dir cannot infer a schema
-        return spark.createDataFrame(
-            [], "event_type string, n_events bigint, total_value double"
-        )
-    back = spark.read.parquet(base)
-    return (
-        back.filter(
+    partitioned by event_date (once per source version), read back ONE
+    WEEK via a partition-column predicate — pruned at planning time,
+    the excluded day-directories (23 of 30 on the testdata) are never
+    scanned (plan pin in tests/test_partitioned_sink.py) — and
+    aggregate per type. The oracle computes the identical week from
+    the original unpartitioned parquet, so a hash match proves the
+    partitioned layout loses nothing (timestamps keep microseconds; the
+    derived partition column round-trips as a real DATE)."""
+    return _per_type(
+        spark,
+        sf_dir,
+        lambda back: back.filter(
             (F.col("event_date") >= F.lit(SLICE_START).cast("date"))
             & (F.col("event_date") < F.lit(SLICE_END).cast("date"))
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum(F.col("value"), "total_value"),
-        )
+        ),
     )
 
 
@@ -184,12 +137,6 @@ def plan_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     unpartitioned source, so the hash match proves pruning lost no
     rows. Calendar dim is generated (sequence over the year), bounded
     and broadcast."""
-    base = _materialize(spark, sf_dir)
-    if not any(d.startswith("event_date=") for d in os.listdir(base)):
-        return spark.createDataFrame(
-            [], "event_type string, n_events bigint, total_value double"
-        )
-    back = spark.read.parquet(base)
     cal = spark.range(1).select(
         F.explode(
             F.sequence(
@@ -201,11 +148,8 @@ def plan_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     # Spark dayofweek: Sunday=1 -> Monday=2 (oracle's DuckDB dayofweek
     # numbers Sunday=0 -> Monday=1)
     dim = cal.filter(F.dayofweek("d") == 2)
-    return (
-        back.join(F.broadcast(dim), back.event_date == dim.d)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum(F.col("value"), "total_value"),
-        )
+    return _per_type(
+        spark,
+        sf_dir,
+        lambda back: back.join(F.broadcast(dim), back.event_date == dim.d),
     )

@@ -14,12 +14,14 @@ testdata carries no sub-microsecond bits, so the conversion
 
 from __future__ import annotations
 
+import hashlib
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_export_system_spark.schemas import STAR_TABLES
-from cdc_export_system_spark.session import ensure_engine_conf
+from cdc_export_system_spark.session import ensure_engine_conf, scratch_dir
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -40,6 +42,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if ntz:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
     return df
+
+
+def source_version(sf_dir: str, name: str) -> str:
+    """Fingerprint of one source table, one file or a directory
+    (relpath/size/mtime of each file): every copy derived from the
+    table is keyed by it, so a source rewritten in place is never
+    answered from a copy of its old contents."""
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    files = [src] if os.path.isfile(src) else sorted(
+        os.path.join(root, fn) for root, _, names in os.walk(src) for fn in names
+    )
+    stats = [(os.path.relpath(p, src), os.stat(p)) for p in files]
+    key = "|".join(f"{rel}:{st.st_size}:{st.st_mtime_ns}" for rel, st in stats)
+    return hashlib.sha256(key.encode()).hexdigest()[:16]
+
+
+_DERIVED: dict[tuple[str, str, str, str], str] = {}
+
+
+def derived_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    kind: str,
+    write: Callable[[DataFrame, str], None],
+) -> str:
+    """The directory ``write(load_table(spark, sf_dir, name), path)``
+    fills: a copy of one source table in another format, layout or
+    schema, built once per process and source version under
+    ``session.scratch_dir`` (so it is removed at exit)."""
+    ensure_engine_conf(spark)  # reading the copy back needs it too
+    key = (os.path.abspath(sf_dir), name, kind, source_version(sf_dir, name))
+    if key not in _DERIVED:
+        path = os.path.join(scratch_dir(f"{name}_{kind}-"), "data")
+        write(load_table(spark, sf_dir, name), path)
+        _DERIVED[key] = path
+    return _DERIVED[key]
 
 
 FAN_OUT_MAX_BYTES = 64 << 20  # only fan out scans smaller than this

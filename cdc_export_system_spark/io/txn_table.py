@@ -12,9 +12,11 @@ dependencies, mirroring the public Delta Lake / Iceberg design points:
   file per commit holding ``meta`` / ``add`` / ``remove`` actions.
   ``add`` carries per-file row counts and PRIMARY-KEY MIN/MAX stats.
 * **Atomic commits, optimistic concurrency** — the version file is
-  created with ``O_CREAT | O_EXCL`` (atomic on a POSIX filesystem; on
-  an object store you would swap in a commit service or conditional
-  PUT, which is exactly what Delta-on-S3 does). A loser re-reads the
+  published by link(2) election (``io/atomic.py``: the payload is
+  written and fsynced under a temp name, then hard-linked to the
+  version's name, which exactly one writer can win; on an object store
+  you would swap in a commit service or conditional PUT, which is
+  exactly what Delta-on-S3 does). A loser re-reads the
   winner's commit and conflicts when the winner removed a file it read
   or removed, or ADDED a file whose pk range overlaps the loser's batch
   (Delta's concurrent-append rule: else two merges could both insert
@@ -265,7 +267,9 @@ class LogTable:
         On losing the race: CommitConflict if the winner removed a
         file we read or removed, or added a file whose pk range
         overlaps our batch's ``key_range`` (its rows may hold keys we
-        upsert or delete); else retry on top."""
+        upsert or delete); else retry on top. A create (``read_version
+        == 0``) that loses raises FileExistsError: the winner created
+        the table."""
         stamped = [
             {"commit": {"ts_us": time.time_ns() // 1_000}},
             *actions,
@@ -280,6 +284,11 @@ class LogTable:
             attempt = read_version + 1
             for _ in range(_COMMIT_ATTEMPTS):
                 if not link_publish(tmp, _log_path(self.root, attempt)):
+                    if read_version == 0:
+                        # version 1 is create's alone: never stack on it
+                        raise FileExistsError(
+                            f"{self.root!r} already holds a LogTable"
+                        )
                     # concurrent winner: check their actions against ours
                     for act in _read_log(self.root, attempt):
                         if "remove" in act and act["remove"]["path"] in touched:
@@ -381,13 +390,17 @@ class LogTable:
         ``max_pk_hint``: callers that already know max(pk) (or any
         upper bound >= it) pass it to skip the dedicated max-scan
         action — one full pass over df saved; bucket K only needs AN
-        upper bound, membership stays a pure function of the key."""
+        upper bound, membership stays a pure function of the key.
+        A root whose log already holds a version raises FileExistsError
+        before any Spark job runs."""
         pk_type = df.schema[pk].dataType
         if not isinstance(pk_type, IntegralType):
             raise ValueError(
                 f"primary key {pk!r} must be an integer column, "
                 f"not {pk_type.simpleString()}"
             )
+        if _list_versions(root):
+            raise FileExistsError(f"{root!r} already holds a LogTable")
         os.makedirs(os.path.join(root, LOG_DIR), exist_ok=True)
         t = cls(spark, root)
         hi = (

@@ -204,30 +204,25 @@ def ensure_lsh_bucketed(spark: SparkSession, sf_dir: str) -> str:
     each sign-LSH bucket is its own file group, so an equality/IN probe
     on `bucket` prunes to the touched buckets at scan time
     (SelectedBucketsCount in the physical plan) instead of scanning the
-    corpus. Idempotent per sf_dir. At 100 TB this is the ingest-time
-    trade: one clustering write, then every probe reads ~(B+1)/2^B of
-    the data."""
-    from cdc_export_system_spark.io.bucketed import _table_name
+    corpus. Idempotent per source version. At 100 TB this is the
+    ingest-time trade: one clustering write, then every probe reads
+    ~(B+1)/2^B of the data."""
+    from cdc_export_system_spark.io.bucketed import _table_name, ensure_tables
 
-    tbl = _table_name(sf_dir, "emb_lsh")
-    if not spark.catalog.tableExists(tbl):
-        import os
-        import shutil
-        from urllib.parse import urlparse
+    tbl = _table_name(sf_dir, "embeddings", "emb_lsh")
 
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(warehouse, tbl.lower())
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
-        emb = load_table(spark, sf_dir, "embeddings")
+    def build() -> None:
         (
-            emb.withColumn("bucket", bucket_id(F.col("embedding")))
+            load_table(spark, sf_dir, "embeddings")
+            .withColumn("bucket", bucket_id(F.col("embedding")))
             .repartition(F.col("bucket"))
             .write.bucketBy(N_LSH_BUCKETS, "bucket")
             .mode("overwrite")
             .format("parquet")
             .saveAsTable(tbl)
         )
+
+    ensure_tables(spark, [tbl], build)
     return tbl
 
 

@@ -298,27 +298,15 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Training: seeded k-means coarse quantizer (ivf_assign), then PQ
     codebooks fit on the RESIDUALS (x - coarse centroid) — residual
     encoding is what distinguishes real IVFADC from IVF + flat PQ.
-    Idempotent per sf_dir; deterministic end to end, so a rebuild
-    reproduces the same index bit-for-bit."""
-    from cdc_export_system_spark.io.bucketed import _table_name
+    Idempotent per source version; deterministic end to end, so a
+    rebuild reproduces the same index bit-for-bit."""
+    from cdc_export_system_spark.io.bucketed import _table_name, ensure_tables
     from cdc_export_system_spark.similarity.ivf import ivf_assign
 
-    codes_tbl = _table_name(sf_dir, "emb_ivfpq_codes")
-    model_tbl = _table_name(sf_dir, "emb_ivfpq_model")
-    if not (
-        spark.catalog.tableExists(codes_tbl)
-        and spark.catalog.tableExists(model_tbl)
-    ):
-        import os
-        import shutil
-        from urllib.parse import urlparse
+    codes_tbl = _table_name(sf_dir, "embeddings", "emb_ivfpq_codes")
+    model_tbl = _table_name(sf_dir, "embeddings", "emb_ivfpq_model")
 
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for tbl in (codes_tbl, model_tbl):
-            stale = os.path.join(warehouse, tbl.lower())
-            if os.path.isdir(stale):
-                shutil.rmtree(stale)
-
+    def build() -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         assigned, centroids = ivf_assign(emb, n_clusters=IVFPQ_NLIST)
         # the assignment feeds the residual build AND the codes join-back;
@@ -372,6 +360,8 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .format("parquet")
             .saveAsTable(model_tbl)
         )
+
+    ensure_tables(spark, [codes_tbl, model_tbl], build)
     return codes_tbl, model_tbl
 
 

@@ -47,7 +47,8 @@ def _export_stream(
     """Drain all available changes, each micro-batch through the batch
     export path (``cdc.exports.export_csv``: one sink write that also
     yields the batch's max(updated_at)); the watermark advances only
-    after a non-empty write. Returns the per-batch job summaries."""
+    after a non-empty write, and only forward. Returns the per-batch job
+    summaries."""
     results: list[dict[str, Any]] = []
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -57,7 +58,10 @@ def _export_stream(
         if n == 0:
             results.append({"epoch": epoch_id, "rowsExported": 0})
             return  # empty batch: no file, no advance (exports.py:127-128)
-        store.upsert(consumer_id, new_wm)
+        # a high-water mark: a late file of older rows never moves it back
+        stored = store.get(consumer_id)
+        if stored is None or new_wm > stored:
+            store.upsert(consumer_id, new_wm)
         results.append({"epoch": epoch_id, "rowsExported": n, "file": path})
 
     q = (

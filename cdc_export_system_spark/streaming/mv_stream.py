@@ -18,8 +18,9 @@ State layout (the production shape, miniaturized): per-version
 parquet dirs ``state_v{N}`` (key -> current dimension + exact cents)
 and ``view_v{N}`` (dimension -> n, signed DECIMAL(38,0) cent-sum).
 On a cluster both live in the table format (LogTable) or a state
-store; versioned dirs keep each micro-batch's write atomic-by-rename
-here without coupling this op to the txn module.
+store. Here batch N reads ``*_v{N}`` and writes fresh ``*_v{N+1}`` dirs
+directly (no rename, so the write is not atomic), never overwriting the
+version it reads, without coupling this op to the txn module.
 """
 
 from __future__ import annotations

@@ -14,14 +14,15 @@ import os
 from cdc_export_system_spark.io.partitioned import (
     SLICE_END,
     SLICE_START,
-    _materialize,
+    partitioned_write,
     sink_parquet_partitioned,
 )
+from cdc_export_system_spark.io.sources import derived_dir
 from tests.conftest import SF_DIR
 
 
 def test_layout_one_dir_per_day_no_file_spray(spark):
-    base = _materialize(spark, SF_DIR)
+    base = derived_dir(spark, SF_DIR, "events", "by_day", partitioned_write)
     days = sorted(
         d for d in os.listdir(base) if d.startswith("event_date=")
     )

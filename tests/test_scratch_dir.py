@@ -17,14 +17,9 @@ import sys
 REPO = os.path.join(os.path.dirname(__file__), "..")
 PKG = os.path.join(REPO, "cdc_export_system_spark")
 
-# session.py owns the scratch root; the two caches are shared ACROSS
-# processes on purpose (a build is reused by the next run), so they
-# live in the temp dir under fixed names
-_ALLOWED = {
-    "session.py",
-    os.path.join("io", "partitioned.py"),
-    os.path.join("io", "format_roundtrip.py"),
-}
+# session.py owns the scratch root; derived copies of source tables
+# (io.sources.derived_dir) live under it too
+_ALLOWED = {"session.py"}
 _TEMP_CALLS = {"mkdtemp", "gettempdir"}
 
 

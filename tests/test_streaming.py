@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import csv
 import os
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -50,6 +51,26 @@ def test_incremental_stream_drains_batches(spark, tmp_path, changes_dir):
     # re-draining with nothing new exports nothing (checkpoint = offset log)
     res3 = run_incremental_export_stream(spark, d, store, "sc", out, ckpt)
     assert sum(r["rowsExported"] for r in res3) == 0
+
+
+def test_incremental_stream_watermark_never_moves_back(spark, tmp_path):
+    """A late change file of older rows is exported, but the stored
+    watermark stays at the newer batch's max: it is a high-water mark,
+    so a later batch incremental export cannot ship those rows again."""
+    d = str(tmp_path / "changes")
+    newer, older = datetime(2026, 3, 1, 12, 0, 0), datetime(2026, 2, 15, 8, 57, 26)
+    users = generate_users(spark, n_rows=50, seed=3).filter(~F.col("is_deleted"))
+    users.withColumn("updated_at", F.lit(newer)).coalesce(1).write.parquet(d)
+    store = WatermarkStore(spark, str(tmp_path / "state"))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    run_incremental_export_stream(spark, d, store, "hw", out, ckpt)
+    assert store.get("hw") == newer
+
+    late = users.withColumn("id", F.col("id") + 1000).withColumn("updated_at", F.lit(older))
+    late.coalesce(1).write.mode("append").parquet(d)
+    res = run_incremental_export_stream(spark, d, store, "hw", out, ckpt)
+    assert sum(r["rowsExported"] for r in res) == users.count()
+    assert store.get("hw") == newer
 
 
 def test_delta_stream_classifies_operations(spark, tmp_path, changes_dir):

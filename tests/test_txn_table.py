@@ -211,6 +211,42 @@ def test_create_rejects_non_integral_pk(spark, tmp_path, type_name):
     assert not root.exists()
 
 
+def test_create_on_an_existing_table_fails(spark, tmp_path):
+    """A second create on a root that holds a table raises before any
+    Spark job and leaves the table as it was (at the parent it stacked
+    a second copy of every row as v2)."""
+    import uuid
+
+    from tests.test_csv_sink import _group_jobs
+
+    t = _mk(spark, tmp_path)
+    sc = spark.sparkContext
+    group = f"recreate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(FileExistsError, match=re.escape(t.root)):
+            _mk(spark, tmp_path)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert _group_jobs(sc, group) == 0
+    assert t.history() == [1]
+    assert t.read().count() == 64
+
+
+def test_create_that_loses_the_v1_election_fails(spark, tmp_path, monkeypatch):
+    """Two creates race past the existence check: the loser of the v1
+    link election raises instead of committing as v2."""
+    from cdc_export_system_spark.io import txn_table
+
+    t = _mk(spark, tmp_path)
+    monkeypatch.setattr(txn_table, "_list_versions", lambda root: [])
+    with pytest.raises(FileExistsError, match=re.escape(t.root)):
+        _mk(spark, tmp_path)
+    monkeypatch.undo()
+    assert t.history() == [1]
+    assert t.read().count() == 64
+
+
 def test_commit_actions_equal_replay_diff(spark, tmp_path):
     """changes() reads each commit's own add/remove actions; the older
     definition diffed the replayed file sets of v-1 and v. Both must
