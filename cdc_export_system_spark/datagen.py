@@ -24,8 +24,6 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_export_system_spark.schemas import USERS_SCHEMA
-
 PINNED_NOW = datetime(2026, 3, 1, 12, 0, 0, tzinfo=timezone.utc)
 SPREAD_SECONDS = 30 * 24 * 3600  # created_at window (30 days)
 UPDATE_LAG_MAX = 3 * 24 * 3600  # update lag 0..3 days
@@ -68,22 +66,3 @@ def generate_users(
         )
     )
 
-
-def write_users(df: DataFrame, path: str) -> None:
-    """Persist the users table as parquet, partition-pruned by update day.
-
-    The date(updated_at) partition column is the Spark analogue of the
-    reference's updated_at btree (seeds/001_schema.sql:11): incremental
-    scans prune whole partitions before row-group stats even apply.
-    """
-    (
-        df.withColumn("updated_day", F.to_date("updated_at"))
-        .write.mode("overwrite")
-        .partitionBy("updated_day")
-        .parquet(path)
-    )
-
-
-def read_users(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    return df.select([f.name for f in USERS_SCHEMA.fields])

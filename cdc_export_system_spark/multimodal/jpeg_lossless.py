@@ -18,11 +18,13 @@ and medical corpora in a 100 TB crawl carry exactly these streams.
   reconstruction is exact, the prediction inputs equal the source
   samples and the whole predictor/difference pass VECTORIZES in
   numpy; only the bit-serial Huffman write is a Python loop.
-* ``decode_jpeg_lossless`` — general SOF3 decoder: any precision
-  2..16, interleaved or per-component scans (all sampling factors
-  1x1 — subsampling is meaningless for lossless RGB), per-scan
-  predictor, mod-2^16 reconstruction. Point transforms (Al != 0) and
-  restart intervals keep an injectable ``NotImplementedError`` seam.
+* ``_decode_scan`` — what ``jpeg.decode_jpeg`` runs for each SOS of an
+  SOF3 frame (the container, SOF and DHT parsing belong to ``jpeg``):
+  any precision 2..16, interleaved or per-component scans (all
+  sampling factors 1x1 — subsampling is meaningless for lossless
+  RGB), per-scan predictor, mod-2^16 reconstruction. Point transforms
+  (Al != 0) and restart intervals keep an injectable
+  ``NotImplementedError`` seam.
 
 Exactness contract: decode(encode(x)) == x bit-for-bit for EVERY
 input — the strongest oracle in the codec family. The driver query
@@ -39,25 +41,30 @@ from __future__ import annotations
 import numpy as np
 
 from cdc_export_system_spark.multimodal.jpeg import (
-    _BitReader,
     _BitWriter,
-    _DC_LENGTHS,
-    _build_decode_table,
-    _canonical_codes,
-    _dht_body,
+    _DC12_LENGTHS,
     _extend,
+    _frame_header,
     _huff_decode,
+    _huffman,
     _magnitude,
-    _make_table,
-    _seg,
+    _sos,
 )
 
 # difference categories 0..16 (T.81 H.1.2.2; 16 = the no-bits 32768)
-_LL_LENGTHS = dict(_DC_LENGTHS)
-for _cat, _len in ((12, 12), (13, 13), (14, 14), (15, 15), (16, 16)):
-    _LL_LENGTHS[_cat] = _len
-_LL_BITS, _LL_VALS = _make_table(_LL_LENGTHS)
-_LL_CODES = _canonical_codes(_LL_BITS, _LL_VALS)
+_LL_BITS, _LL_VALS, _LL_CODES = _huffman({**_DC12_LENGTHS, 16: 16})
+
+# T.81 Table H.1 predictors over Ra (left), Rb (above), Rc (above-left);
+# the same expressions serve numpy grids (encoder) and samples (decoder)
+_PREDICTORS = {
+    1: lambda a, b, c: a,
+    2: lambda a, b, c: b,
+    3: lambda a, b, c: c,
+    4: lambda a, b, c: a + b - c,
+    5: lambda a, b, c: a + ((b - c) >> 1),
+    6: lambda a, b, c: b + ((a - c) >> 1),
+    7: lambda a, b, c: (a + b) >> 1,
+}
 
 
 def _predictions(s: np.ndarray, predictor: int, precision: int) -> np.ndarray:
@@ -71,22 +78,9 @@ def _predictions(s: np.ndarray, predictor: int, precision: int) -> np.ndarray:
     a[:, 1:] = s[:, :-1]
     b[1:, :] = s[:-1, :]
     c[1:, 1:] = s[:-1, :-1]
-    if predictor == 1:
-        pred = a.copy()
-    elif predictor == 2:
-        pred = b.copy()
-    elif predictor == 3:
-        pred = c.copy()
-    elif predictor == 4:
-        pred = a + b - c
-    elif predictor == 5:
-        pred = a + ((b - c) >> 1)
-    elif predictor == 6:
-        pred = b + ((a - c) >> 1)
-    elif predictor == 7:
-        pred = (a + b) >> 1
-    else:
+    if predictor not in _PREDICTORS:
         raise ValueError(f"predictor must be 1..7, got {predictor}")
+    pred = np.array(_PREDICTORS[predictor](a, b, c))
     pred[0, 1:] = a[0, 1:]  # first row: Ra regardless of predictor
     if h > 1:
         pred[1:, 0] = b[1:, 0]  # first column: Rb
@@ -133,147 +127,42 @@ def encode_jpeg_lossless(
             w.put(code, length)
             if size:
                 w.put(bits, size)
-        sos = bytes([1, ci + 1, 0x00]) + bytes([predictors[ci], 0, 0])
-        chunks.append(_seg(0xDA, sos) + w.flush())
-
-    sof = bytes([precision]) + height.to_bytes(2, "big") \
-        + width.to_bytes(2, "big") + bytes([components])
-    for cid in range(1, components + 1):
-        sof += bytes([cid, 0x11, 0])
+        chunks.append(_sos((ci + 1,), predictors[ci], 0, 0) + w.flush())
     return (
-        b"\xff\xd8"
-        + _seg(0xC3, sof)  # SOF3: lossless sequential (no DQT at all)
-        + _seg(0xC4, _dht_body(0, 0, _LL_BITS, _LL_VALS))
+        _frame_header(  # SOF3: lossless sequential (no DQT at all)
+            0xC3, precision, width, height, [(1, 1)] * components,
+            [(0, 0, _LL_BITS, _LL_VALS)],
+        )
         + b"".join(chunks)
         + b"\xff\xd9"
     )
 
 
-def decode_jpeg_lossless(payload: bytes) -> dict:
-    """Lossless (SOF3) JPEG -> dict with dims, precision, and an
-    (h, w, 3) raster (uint8 for precision <= 8, uint16 above;
-    grayscale replicates to 3 channels like the other decoders)."""
-    d = bytes(payload)
-    if d[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    htables: dict[tuple[int, int], tuple] = {}
-    frame = None
-    prec = 8
-    planes: list[np.ndarray] = []
-    decoded: set[int] = set()
-    while pos + 4 <= len(d):
-        if d[pos] != 0xFF:
-            raise ValueError("marker expected")
-        marker = d[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        seglen = int.from_bytes(d[pos + 2 : pos + 4], "big")
-        body = d[pos + 4 : pos + 2 + seglen]
-        if len(body) != seglen - 2:
-            raise ValueError("truncated JPEG segment")
-        if marker == 0xC3:  # SOF3
-            prec = body[0]
-            if not 2 <= prec <= 16:
-                raise ValueError(f"invalid lossless precision {prec}")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            ncomp = body[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, _tq = body[6 + 3 * c : 9 + 3 * c]
-                if hv != 0x11:
-                    raise NotImplementedError(
-                        "lossless JPEG with subsampled components"
-                    )
-                comps.append(cid)
-            frame = (h, w, comps)
-            planes = [np.zeros((h, w), dtype=np.int64) for _ in comps]
-        elif marker == 0xC4:  # DHT
-            b = body
-            while b:
-                tclass, ident = b[0] >> 4, b[0] & 15
-                bits = list(b[1:17])
-                n = sum(bits)
-                vals = list(b[17 : 17 + n])
-                htables[(tclass, ident)] = _build_decode_table(bits, vals)
-                b = b[17 + n :]
-        elif marker == 0xDD:  # DRI
-            if int.from_bytes(body[:2], "big"):
-                raise NotImplementedError(
-                    "restart intervals in lossless scans"
-                )
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("SOS before SOF3")
-            h, w, comps = frame
-            ns = body[0]
-            scan = []
-            for c in range(ns):
-                cs, tables = body[1 + 2 * c], body[2 + 2 * c]
-                scan.append((comps.index(cs), tables >> 4))
-            predictor = body[1 + 2 * ns]  # Ss
-            pt = body[3 + 2 * ns] & 15  # Al = point transform
-            if pt != 0:
-                raise NotImplementedError("lossless point transform")
-            if not 1 <= predictor <= 7:
-                raise ValueError(f"invalid predictor {predictor}")
-            reader = _BitReader(d, pos + 2 + seglen)
-            half = 1 << (prec - 1)
-            for y in range(h):
-                for x in range(w):
-                    for cidx, dct in scan:
-                        p = planes[cidx]
-                        if y == 0 and x == 0:
-                            pr = half
-                        elif y == 0:
-                            pr = p[0, x - 1]
-                        elif x == 0:
-                            pr = p[y - 1, 0]
-                        else:
-                            ra = p[y, x - 1]
-                            rb = p[y - 1, x]
-                            rc = p[y - 1, x - 1]
-                            if predictor == 1:
-                                pr = ra
-                            elif predictor == 2:
-                                pr = rb
-                            elif predictor == 3:
-                                pr = rc
-                            elif predictor == 4:
-                                pr = ra + rb - rc
-                            elif predictor == 5:
-                                pr = ra + ((rb - rc) >> 1)
-                            elif predictor == 6:
-                                pr = rb + ((ra - rc) >> 1)
-                            else:
-                                pr = (ra + rb) >> 1
-                        ssss = _huff_decode(reader, htables[(0, dct)])
-                        if ssss == 16:
-                            diff = 32768
-                        else:
-                            diff = _extend(reader.bits(ssss), ssss)
-                        p[y, x] = (pr + diff) % 65536
-            decoded.update(cidx for cidx, _ in scan)
-            pos = reader.pos
-            continue
-        pos += 2 + seglen
-    if frame is None or len(decoded) != len(frame[2]):
-        raise ValueError("lossless JPEG missing SOF3 or component scans")
-    h, w, comps = frame
-    dtype = np.uint8 if prec <= 8 else np.uint16
-    if len(comps) == 3:
-        raster = np.stack(planes, axis=-1).astype(dtype)
-    elif len(comps) == 1:
-        g = planes[0].astype(dtype)
-        raster = np.stack([g, g, g], axis=-1)
-    else:
-        raise NotImplementedError(f"{len(comps)}-component lossless frame")
-    return {
-        "codec": "jpeg_lossless",
-        "width": w,
-        "height": h,
-        "channels": 3,
-        "precision": prec,
-        "raster": raster,
-    }
+def _decode_scan(reader, frame, scan, htables, predictor, pt) -> None:
+    """One SOS of an SOF3 frame (T.81 H.2): per-sample differences
+    against the scan's predictor, reconstructed mod 2^16 into the
+    frame's sample planes."""
+    if pt != 0:
+        raise NotImplementedError("lossless point transform")
+    if predictor not in _PREDICTORS:
+        raise ValueError(f"invalid predictor {predictor}")
+    predict = _PREDICTORS[predictor]
+    comps = [(frame.planes[ci], htables[(0, td)]) for ci, td, _ta in scan]
+    half = 1 << (frame.precision - 1)
+    for y in range(frame.height):
+        for x in range(frame.width):
+            for p, table in comps:
+                if y == 0 and x == 0:
+                    pr = half
+                elif y == 0:
+                    pr = p[0, x - 1]
+                elif x == 0:
+                    pr = p[y - 1, 0]
+                else:
+                    pr = predict(p[y, x - 1], p[y - 1, x], p[y - 1, x - 1])
+                ssss = _huff_decode(reader, table)
+                if ssss == 16:
+                    diff = 32768
+                else:
+                    diff = _extend(reader.bits(ssss), ssss)
+                p[y, x] = (pr + diff) % 65536

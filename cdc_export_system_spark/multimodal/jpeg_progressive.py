@@ -1,10 +1,10 @@
-"""Progressive JPEG (ITU-T T.81 SOF2) — spectral selection AND
+"""Progressive JPEG (ITU-T T.81 SOF2) scans — spectral selection AND
 successive approximation, both directions.
 
-This closes the PROGRESSIVE leg of the codec seam (carried since r9).
 Progressive files dominate web corpora (every libjpeg ``-progressive``
 output, most CDN-optimized images), so a 100 TB multimodal crawl cannot
-seam on them.
+seam on them. The container (SOI, DQT, SOF, DHT, SOS framing) belongs
+to ``jpeg``; this module holds only what is progressive about a scan.
 
 * ``encode_jpeg_progressive`` — 8-bit 3-component 4:4:4, an 8-scan
   script exercising BOTH progressive mechanisms: interleaved DC first
@@ -15,14 +15,16 @@ seam on them.
   a progressive file carries bit-identical coefficients to its
   sequential sibling — the property the equality pin and the SQL
   oracle both lean on.
-* ``decode_jpeg_progressive`` — the general SOF2 decoder: any scan
-  script (spectral bands in any order, any Ah/Al ladder, interleaved
-  DC scans, per-component AC scans with the true — not MCU-padded —
-  block dims), EOBRUN carry across blocks, and the refinement
-  correction-bit walk ported from the public T.81 G.2 / libjpeg
-  ``decode_mcu_AC_refine`` algorithm. Restart intervals inside
-  progressive scans keep an injectable ``NotImplementedError`` seam
-  (our encoder never emits them; sequential DRI files decode fully).
+* ``_decode_scan`` — what ``jpeg.decode_jpeg`` runs for each SOS of an
+  SOF2 frame: any scan script (spectral bands in any order, any Ah/Al
+  ladder, interleaved DC scans, per-component AC scans over the true —
+  not MCU-padded — block dims), EOBRUN carry across blocks, and the
+  refinement correction-bit walk ported from the public T.81 G.2 /
+  libjpeg ``decode_mcu_AC_refine`` algorithm. The coefficients it
+  fills are rebuilt by the same path as a sequential frame's.
+  Restart intervals inside progressive scans keep an injectable
+  ``NotImplementedError`` seam (our encoder never emits them;
+  sequential DRI files decode fully).
 
 Scale: like the sequential codec this runs row-locally inside
 mapInPandas batches; the scan state (per-component coefficient grids)
@@ -31,37 +33,29 @@ is one image's blocks, never shuffled.
 
 from __future__ import annotations
 
-import numpy as np
-
 from cdc_export_system_spark.multimodal.jpeg import (
     QTABLE,
     ZIGZAG,
     _AC_LENGTHS,
-    _BitReader,
     _BitWriter,
     _DC_BITS,
     _DC_CODES,
     _DC_VALS,
     _SUBSAMPLING,
-    _build_decode_table,
-    _canonical_codes,
-    _dht_body,
-    _huff_decode,
     _extend,
+    _frame_header,
+    _huff_decode,
+    _huffman,
     _magnitude,
-    _make_table,
     _quantized_blocks,
-    _seg,
-    _ycbcr_to_rgb,
-    _idct2,
+    _sos,
 )
 
 # progressive AC table = sequential symbols + EOBn (n = 1..14, RS = n<<4)
 _ACP_LENGTHS = dict(_AC_LENGTHS)
 for _n in range(1, 15):
     _ACP_LENGTHS[_n << 4] = 8
-_ACP_BITS, _ACP_VALS = _make_table(_ACP_LENGTHS)
-_ACP_CODES = _canonical_codes(_ACP_BITS, _ACP_VALS)
+_ACP_BITS, _ACP_VALS, _ACP_CODES = _huffman(_ACP_LENGTHS)
 
 
 # ---------------------------------------------------------------------------
@@ -248,30 +242,20 @@ def encode_jpeg_progressive(
         w = _BitWriter()
         if comp is None:
             _encode_dc_scan(w, zz, mcux, mcuy, ah, al)
-            ncomp = bytes([3]) + b"".join(
-                bytes([cid, 0x00]) for cid in (1, 2, 3)
-            )
+            cids = (1, 2, 3)
         else:
             if ah == 0:
                 _encode_ac_first(w, zz[comp], ss, se, al)
             else:
                 _encode_ac_refine(w, zz[comp], ss, se, al)
-            ncomp = bytes([1, comp + 1, 0x00])
-        sos = ncomp + bytes([ss, se, ah * 16 + al])
-        chunks.append(_seg(0xDA, sos) + w.flush())
-
-    qz = bytes(int(QTABLE.reshape(64)[ZIGZAG][i]) for i in range(64))
-    sof = bytes([8]) + height.to_bytes(2, "big") + width.to_bytes(2, "big") \
-        + bytes([3])
-    for cid in (1, 2, 3):
-        sof += bytes([cid, 0x11, 0])
+            cids = (comp + 1,)
+        chunks.append(_sos(cids, ss, se, ah * 16 + al) + w.flush())
     return (
-        b"\xff\xd8"
-        + _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-        + _seg(0xDB, bytes([0]) + qz)
-        + _seg(0xC2, sof)  # SOF2: progressive
-        + _seg(0xC4, _dht_body(0, 0, _DC_BITS, _DC_VALS))
-        + _seg(0xC4, _dht_body(1, 0, _ACP_BITS, _ACP_VALS))
+        _frame_header(
+            0xC2, 8, width, height, factors,
+            [(0, 0, _DC_BITS, _DC_VALS), (1, 0, _ACP_BITS, _ACP_VALS)],
+            QTABLE,
+        )
         + b"".join(chunks)
         + b"\xff\xd9"
     )
@@ -282,40 +266,27 @@ def encode_jpeg_progressive(
 # ---------------------------------------------------------------------------
 
 
-def _decode_dc_scan(reader, scan, frame, htables, coef, mcux, mcuy, ah, al):
+def _decode_dc_scan(reader, frame, scan, htables, ah, al):
     """Interleaved (or single-component) DC scan: Ah=0 -> predicted
     diff decode at Al; Ah>0 -> one refinement bit per block."""
-    h, w, comps = frame
-    comp_map = {c[0]: c for c in comps}
-    ns = len(scan)
-    pred = [0] * ns
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for si, (cs, dct, _act) in enumerate(scan):
-                cidx = next(i for i, c in enumerate(comps) if c[0] == cs)
-                _cid, hi, vi, _tq = comp_map[cs]
-                if ns == 1:
-                    hi = vi = 1  # non-interleaved: walk the comp grid
-                for dy in range(vi):
-                    for dx in range(hi):
-                        by, bx = my * vi + dy, mx * hi + dx
-                        if ah == 0:
-                            size = _huff_decode(reader, htables[(0, dct)])
-                            diff = _extend(reader.bits(size), size)
-                            pred[si] += diff
-                            coef[cidx][by, bx, 0] = pred[si] << al
-                        else:
-                            if reader.bit():
-                                coef[cidx][by, bx, 0] |= 1 << al
+    dc_tables = {ci: td for ci, td, _ta in scan}
+    pred = dict.fromkeys(dc_tables, 0)
+    for mcu in frame.mcus(list(dc_tables)):
+        for ci, by, bx in mcu:
+            if ah == 0:
+                size = _huff_decode(reader, htables[(0, dc_tables[ci])])
+                pred[ci] += _extend(reader.bits(size), size)
+                frame.coef[ci][by, bx, 0] = pred[ci] << al
+            elif reader.bit():
+                frame.coef[ci][by, bx, 0] |= 1 << al
 
 
-def _decode_ac_first(reader, actable, zzc, brows, bcols, ss, se, al, eobrun):
+def _decode_ac_first(reader, actable, zzc, brows, bcols, ss, se, al):
+    eobrun = 0  # scan-local per T.81 (resets at every SOS)
     for r0 in range(brows):
         for c0 in range(bcols):
-            if eobrun[0] > 0:
-                eobrun[0] -= 1
+            if eobrun > 0:
+                eobrun -= 1
                 continue
             k = ss
             while k <= se:
@@ -323,7 +294,7 @@ def _decode_ac_first(reader, actable, zzc, brows, bcols, ss, se, al, eobrun):
                 r, s = rs >> 4, rs & 15
                 if s == 0:
                     if r != 15:
-                        eobrun[0] = (1 << r) + (reader.bits(r) if r else 0) - 1
+                        eobrun = (1 << r) + (reader.bits(r) if r else 0) - 1
                         break
                     k += 16  # ZRL
                     continue
@@ -334,23 +305,24 @@ def _decode_ac_first(reader, actable, zzc, brows, bcols, ss, se, al, eobrun):
                 k += 1
 
 
-def _decode_ac_refine(reader, actable, zzc, brows, bcols, ss, se, al, eobrun):
+def _decode_ac_refine(reader, actable, zzc, brows, bcols, ss, se, al):
     """T.81 G.2 / libjpeg decode_mcu_AC_refine: walk the band reading
     correction bits for already-significant coefficients; (run, 1)
     symbols place new ±2^Al values after `run` zero-history zeros."""
     p1 = 1 << al
     m1 = -(1 << al)
+    eobrun = 0  # scan-local per T.81 (resets at every SOS)
     for r0 in range(brows):
         for c0 in range(bcols):
             k = ss
-            if eobrun[0] == 0:
+            if eobrun == 0:
                 while k <= se:
                     rs = _huff_decode(reader, actable)
                     r, s = rs >> 4, rs & 15
                     newval = 0
                     if s == 0:
                         if r != 15:
-                            eobrun[0] = (1 << r) + (reader.bits(r) if r else 0)
+                            eobrun = (1 << r) + (reader.bits(r) if r else 0)
                             break  # -> EOB phase below (this block included)
                         # ZRL: skip 16 zero-history coefficients
                     else:
@@ -371,7 +343,7 @@ def _decode_ac_refine(reader, actable, zzc, brows, bcols, ss, se, al, eobrun):
                     if newval and k <= se:
                         zzc[r0, c0, k] = newval
                     k += 1
-            if eobrun[0] > 0:
+            if eobrun > 0:
                 while k <= se:
                     cur = int(zzc[r0, c0, k])
                     if cur != 0:
@@ -379,171 +351,20 @@ def _decode_ac_refine(reader, actable, zzc, brows, bcols, ss, se, al, eobrun):
                             if (cur & p1) == 0:
                                 zzc[r0, c0, k] = cur + (p1 if cur >= 0 else m1)
                     k += 1
-                eobrun[0] -= 1
+                eobrun -= 1
 
 
-def decode_jpeg_progressive(payload: bytes) -> dict:
-    """Progressive (SOF2) JPEG -> dict with dims and an (h, w, 3) uint8
-    RGB raster. Accumulates coefficients across an arbitrary scan
-    script, then dequantizes + IDCTs once at EOI."""
-    d = bytes(payload)
-    if d[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], tuple] = {}
-    frame = None
-    coef = None  # per-component (rows, cols, 64) zigzag coefficient grids
-    geom = None  # (mcux, mcuy, hmax, vmax, per-comp true block dims)
-    restart_interval = 0
-    while pos + 4 <= len(d):
-        if d[pos] != 0xFF:
-            raise ValueError("marker expected")
-        marker = d[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        seglen = int.from_bytes(d[pos + 2 : pos + 4], "big")
-        body = d[pos + 4 : pos + 2 + seglen]
-        if len(body) != seglen - 2:
-            raise ValueError("truncated JPEG segment")
-        if marker == 0xDB:
-            b = body
-            while b:
-                pq, tq = b[0] >> 4, b[0] & 15
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables")
-                tbl = np.zeros(64, dtype=np.int64)
-                tbl[ZIGZAG] = np.frombuffer(b[1:65], dtype=np.uint8)
-                qtables[tq] = tbl.reshape(8, 8)
-                b = b[65:]
-        elif marker == 0xC2:  # SOF2
-            prec = body[0]
-            if prec != 8:
-                raise NotImplementedError("only 8-bit precision")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            ncomp = body[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            for _cid, hi, vi, _tq in comps:
-                if hmax % hi or vmax % vi:
-                    raise NotImplementedError("non-integer sampling ratios")
-            frame = (h, w, comps)
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
-            coef = []
-            truedims = []
-            for _cid, hi, vi, _tq in comps:
-                coef.append(
-                    np.zeros((mcuy * vi, mcux * hi, 64), dtype=np.int64)
-                )
-                ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)
-                truedims.append((-(-ch // 8), -(-cw // 8)))
-            geom = (mcux, mcuy, hmax, vmax, truedims)
-        elif marker == 0xC4:
-            b = body
-            while b:
-                tclass, ident = b[0] >> 4, b[0] & 15
-                bits = list(b[1:17])
-                n = sum(bits)
-                vals = list(b[17 : 17 + n])
-                htables[(tclass, ident)] = _build_decode_table(bits, vals)
-                b = b[17 + n :]
-        elif marker == 0xDD:
-            restart_interval = int.from_bytes(body[:2], "big")
-            if restart_interval:
-                raise NotImplementedError(
-                    "restart intervals in progressive scans"
-                )
-        elif marker == 0xDA:
-            if frame is None or coef is None:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            scan = []
-            for c in range(ns):
-                cs, tables = body[1 + 2 * c], body[2 + 2 * c]
-                scan.append((cs, tables >> 4, tables & 15))
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ahal = body[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 15
-            mcux, mcuy, hmax, vmax, truedims = geom
-            h, w, comps = frame
-            reader = _BitReader(d, pos + 2 + seglen)
-            if ss == 0:  # DC scan (se must be 0 per spec)
-                if se != 0:
-                    raise ValueError("DC scan with Se != 0")
-                if ns == 1:
-                    cidx = next(
-                        i for i, c in enumerate(comps) if c[0] == scan[0][0]
-                    )
-                    brows, bcols = truedims[cidx]
-                    _decode_dc_scan(
-                        reader, scan, frame, htables, coef, bcols, brows, ah, al
-                    )
-                else:
-                    _decode_dc_scan(
-                        reader, scan, frame, htables, coef, mcux, mcuy, ah, al
-                    )
-            else:  # AC scan: exactly one component (T.81 constraint)
-                if ns != 1:
-                    raise ValueError("interleaved AC scan is not legal")
-                cs, _dct, act = scan[0]
-                cidx = next(i for i, c in enumerate(comps) if c[0] == cs)
-                brows, bcols = truedims[cidx]
-                eobrun = [0]  # scan-local per T.81 (resets at every SOS)
-                if ah == 0:
-                    _decode_ac_first(
-                        reader, htables[(1, act)], coef[cidx],
-                        brows, bcols, ss, se, al, eobrun,
-                    )
-                else:
-                    _decode_ac_refine(
-                        reader, htables[(1, act)], coef[cidx],
-                        brows, bcols, ss, se, al, eobrun,
-                    )
-            pos = reader.pos
-            continue
-        pos += 2 + seglen
-    if frame is None or coef is None:
-        raise ValueError("progressive JPEG missing SOF2/SOS")
-    # reconstruct: de-zigzag, dequantize, IDCT, upsample, color-convert
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    planes = []
-    for ci, (_cid, hi, vi, tq) in enumerate(comps):
-        gh, gw = coef[ci].shape[:2]
-        nat = np.zeros((gh, gw, 64), dtype=np.int64)
-        nat[:, :, ZIGZAG] = coef[ci]
-        deq = nat.reshape(-1, 8, 8) * qtables[tq]
-        spatial = _idct2(deq.astype(np.float64)) + 128.0
-        plane = (
-            spatial.reshape(gh, gw, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(gh * 8, gw * 8)
-        )
-        ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)
-        plane = plane[:ch, :cw]
-        if hi != hmax or vi != vmax:
-            plane = np.repeat(
-                np.repeat(plane, vmax // vi, axis=0), hmax // hi, axis=1
-            )
-        planes.append(plane[:h, :w])
-    if len(comps) == 3:
-        raster = _ycbcr_to_rgb(planes[0], planes[1], planes[2])
-    elif len(comps) == 1:
-        g = np.floor(planes[0] + 0.5).clip(0, 255).astype(np.uint8)
-        raster = np.stack([g, g, g], axis=-1)
-    else:
-        raise NotImplementedError(f"{len(comps)}-component frame")
-    return {
-        "codec": "jpeg_progressive",
-        "width": w,
-        "height": h,
-        "channels": 3,
-        "raster": raster,
-    }
+def _decode_scan(reader, frame, scan, htables, ss, se, ah, al):
+    """One SOS of an SOF2 frame into its zigzag coefficient grids: a DC
+    scan (Ss=0, interleaved or not) or one component's AC band."""
+    if ss == 0:  # DC scan (se must be 0 per spec)
+        if se != 0:
+            raise ValueError("DC scan with Se != 0")
+        _decode_dc_scan(reader, frame, scan, htables, ah, al)
+        return
+    if len(scan) != 1:  # AC scan: exactly one component (T.81 constraint)
+        raise ValueError("interleaved AC scan is not legal")
+    ci, _td, ta = scan[0]
+    (_decode_ac_first if ah == 0 else _decode_ac_refine)(
+        reader, htables[(1, ta)], frame.coef[ci], *frame.blocks(ci), ss, se, al
+    )

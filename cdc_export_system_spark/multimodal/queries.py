@@ -1087,7 +1087,7 @@ def multimodal_jpeg_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# 12-bit closed form (multimodal/jpeg12.py): center 2048, q00 = 128 —
+# 12-bit closed form (multimodal/jpeg.py, encode_jpeg12): center 2048, q00 = 128 —
 # mirrored float-op-for-float-op against jpeg12_constant_roundtrip
 _JPEG12_ORACLE = """
     WITH g AS (
@@ -1133,7 +1133,7 @@ def multimodal_jpeg12_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """12-BIT extended sequential JPEG (SOF1) end to end — the
     precision leg of the codec seam, closed: constant 12-bit images
     (channels derive from doc_id mod 4096) go through
-    multimodal/jpeg12.py's encoder (level shift 2048, x16 quant table
+    multimodal/jpeg.py's encode_jpeg12 (level shift 2048, x16 quant table
     carried as Pq=1 16-bit DQT — the structural difference that breaks
     byte-precision parsers — DC categories to 15 / AC sizes to 14 in
     the embedded tables, SOF1) and back through decode_jpeg (which
@@ -1142,7 +1142,7 @@ def multimodal_jpeg12_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB crawl hinge on this path. The oracle mirrors the 12-bit
     DC-only closed form y' = clip(round(round(8(y-2048)/128)*128/8)
     + 2048) float-op-for-float-op; the encoder computes the DC via the
-    exact sum/8 path (see jpeg12.py) so the s % 16 == 8 floor
+    exact sum/8 path (see jpeg._quantized_blocks) so the s % 16 == 8 floor
     boundary, which the einsum DCT's epsilon would flip, lands
     deterministically on BOTH engines. One wrong bit in the 16-bit
     DQT parse, the wide Huffman tables, or the level shift flips every
@@ -1150,8 +1150,8 @@ def multimodal_jpeg12_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: row-local encode+decode inside one mapInPandas stage;
     payload bytes never shuffle."""
-    from cdc_export_system_spark.multimodal.jpeg import decode_jpeg
-    from cdc_export_system_spark.multimodal.jpeg12 import (
+    from cdc_export_system_spark.multimodal.jpeg import (
+        decode_jpeg,
         encode_jpeg12,
         jpeg12_constant_roundtrip,
     )

@@ -28,6 +28,22 @@ NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 # naive TIMESTAMP sees under our pinned UTC session.
 INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
+# SQL confs every engine session needs, applied at build time by
+# get_spark and at run time by ensure_engine_conf (all runtime-settable).
+_ENGINE_SQL_CONF = {
+    # deterministic timestamp semantics, whatever the host zone
+    "spark.sql.session.timeZone": "UTC",
+    NANOS_AS_LONG: "true",
+    INFER_NTZ: "false",
+    # Keep bucketed scans (and their bucket pruning) for point probes: the
+    # DisableUnnecessaryBucketedScan rule drops the bucketed layout when no
+    # join/aggregate requires the distribution, which also forfeits the
+    # `bucket IN (...)` file pruning the LSH serving path relies on.
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
+    # Python DataSource filter pushdown (io/python_source.py) is opt-in
+    "spark.sql.python.filterPushdown.enabled": "true",
+}
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -132,17 +148,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(effective_master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(NANOS_AS_LONG, "true")
-        .config(INFER_NTZ, "false")
-        # see ensure_engine_conf: preserve bucket pruning for point probes
-        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        # allow Python DataSources to absorb filters (io/python_source.py)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         # Per-process warehouse: the session catalog is in-memory, so a
         # fresh JVM rebuilds managed bucketed/index tables anyway — but
@@ -168,7 +177,7 @@ def get_spark(
         builder = builder.config(
             "spark.driver.memory", f"{_local_driver_mem_gb()}g"
         )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_ENGINE_SQL_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -179,21 +188,12 @@ def get_spark(
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable confs to a session we did not build.
 
-    The correctness driver hands us its own SparkSession; these two confs are
-    required for deterministic timestamp semantics and for reading the
-    nanosecond-precision events table, and both are runtime-settable.
+    A caller may hand us its own SparkSession; _ENGINE_SQL_CONF gives it
+    the same SQL semantics get_spark builds in.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(NANOS_AS_LONG, "true")
-    spark.conf.set(INFER_NTZ, "false")
+    for k, v in _ENGINE_SQL_CONF.items():
+        spark.conf.set(k, v)
     _pin_jvm_utc(spark)
-    # Keep bucketed scans (and their bucket pruning) for point probes: the
-    # DisableUnnecessaryBucketedScan rule drops the bucketed layout when no
-    # join/aggregate requires the distribution, which also forfeits the
-    # `bucket IN (...)` file pruning the LSH serving path relies on.
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    # Python DataSource filter pushdown (io/python_source.py) is opt-in
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     # Right-size shuffle parallelism for a session left at the 200 default:
     # results are partition-invariant (scripts/partition_sweep.py), but
     # eagerly-materialized intermediates (localCheckpoint) bypass AQE

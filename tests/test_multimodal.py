@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +18,12 @@ from cdc_export_system_spark.multimodal.binary_ops import (
     fake_decoder,
     resize_media,
     sample_frames,
+)
+from cdc_export_system_spark.multimodal.jpeg import (
+    QTABLE,
+    decode_jpeg,
+    encode_jpeg,
+    jpeg_constant_roundtrip,
 )
 from tests.conftest import SF_DIR
 
@@ -179,3 +186,184 @@ def test_g711_wav_container_roundtrip_and_unknown_tag_seam():
     p[20] = 0x11  # fmt tag -> IMA ADPCM
     with _pytest.raises(NotImplementedError):
         decode_wav(bytes(p))
+
+
+# ---------------------------------------------------------------------------
+# JPEG container (multimodal/jpeg.py); the codec's round-9 pins live in
+# tests/test_round9_semantics.py
+# ---------------------------------------------------------------------------
+
+
+def _separate_scan_jpeg(w, h, img, subsampling, drop_last_scan=False):
+    """encode_jpeg's frame with each component coded in its OWN
+    one-component SOS (T.81 A.2.2, legal in any sequential frame): the
+    component's true block grid in raster order, one DC predictor per
+    scan."""
+    from cdc_export_system_spark.multimodal import jpeg as J
+
+    factors = J._SUBSAMPLING[subsampling]
+    blocks, _mcux, _mcuy = J._quantized_blocks(w, h, img.tobytes(), factors)
+    hmax = max(f[0] for f in factors)
+    vmax = max(f[1] for f in factors)
+    qz = bytes(int(QTABLE.reshape(64)[J.ZIGZAG][i]) for i in range(64))
+    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([3])
+    for cid, (hi, vi) in enumerate(factors, 1):
+        sof += bytes([cid, hi * 16 + vi, 0])
+    out = (
+        b"\xff\xd8"
+        + J._seg(0xDB, bytes([0]) + qz)
+        + J._seg(0xC0, sof)
+        + J._seg(0xC4, J._dht_body(0, 0, J._DC_BITS, J._DC_VALS))
+        + J._seg(0xC4, J._dht_body(1, 0, J._AC_BITS, J._AC_VALS))
+    )
+    for c, (hi, vi) in enumerate(factors[: 2 if drop_last_scan else 3]):
+        ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)  # true extent
+        wtr = J._BitWriter()
+        pred = 0
+        for r in range(-(-ch // 8)):
+            for col in range(-(-cw // 8)):
+                pred = J._encode_block(
+                    wtr, blocks[c][r, col].reshape(64)[J.ZIGZAG], pred,
+                    J._DC_CODES, J._AC_CODES,
+                )
+        out += J._seg(0xDA, bytes([1, c + 1, 0x00, 0, 63, 0])) + wtr.flush()
+    return out + b"\xff\xd9"
+
+
+@pytest.mark.parametrize("subsampling", ["444", "420"])
+def test_jpeg_sequential_frame_with_one_scan_per_component(subsampling):
+    """A sequential frame may code its components in separate
+    non-interleaved scans; every scan must land in the raster, which
+    then equals the interleaved file's. Dims cross MCU boundaries, so
+    a one-component scan's true block grid is smaller than the MCU-
+    padded one."""
+    yy, xx = np.mgrid[0:13, 0:19]
+    images = [
+        np.full((8, 16, 3), (200, 30, 90), dtype=np.uint8),
+        np.stack(
+            [(xx * 9) % 256, (yy * 13) % 256, (xx + yy) * 4 % 256], axis=-1
+        ).astype(np.uint8),
+        np.random.RandomState(4).randint(0, 256, (21, 35, 3)).astype(np.uint8),
+    ]
+    for img in images:
+        h, w = img.shape[:2]
+        sep = decode_jpeg(_separate_scan_jpeg(w, h, img, subsampling))
+        ref = decode_jpeg(encode_jpeg(w, h, img.tobytes(), subsampling))
+        assert sep["codec"] == "jpeg" and (sep["width"], sep["height"]) == (w, h)
+        assert (sep["raster"] == ref["raster"]).all(), (w, h)
+    expect = np.array(jpeg_constant_roundtrip(200, 30, 90), dtype=np.uint8)
+    const = decode_jpeg(_separate_scan_jpeg(16, 8, images[0], subsampling))
+    assert (const["raster"] == expect).all()
+
+
+def test_jpeg_scans_missing_a_component_error():
+    """A frame whose scans never cover a declared component must fail
+    naming it, not decode the scanned planes as something else."""
+    img = np.full((8, 16, 3), (200, 30, 90), dtype=np.uint8)
+    with pytest.raises(ValueError, match="component 3"):
+        decode_jpeg(_separate_scan_jpeg(16, 8, img, "444", drop_last_scan=True))
+
+
+def test_jpeg_gray_frame_declaring_2x2_sampling_reads_block_raster_order():
+    """A one-component frame's only scan is non-interleaved whatever
+    sampling factors its SOF declares (T.81 A.2.2): one block per MCU in
+    raster order, so a 2x2 declaration decodes like a 1x1 one."""
+    from cdc_export_system_spark.multimodal import jpeg as J
+
+    w, h = 37, 21
+    img = np.random.RandomState(1).randint(0, 256, (h, w, 3)).astype(np.uint8)
+    blocks, _mcux, _mcuy = J._quantized_blocks(
+        w, h, img.tobytes(), J._SUBSAMPLING["444"]
+    )
+    qz = bytes(int(QTABLE.reshape(64)[J.ZIGZAG][i]) for i in range(64))
+    wtr = J._BitWriter()
+    pred = 0
+    for r in range(-(-h // 8)):
+        for c in range(-(-w // 8)):
+            pred = J._encode_block(
+                wtr, blocks[0][r, c].reshape(64)[J.ZIGZAG], pred,
+                J._DC_CODES, J._AC_CODES,
+            )
+    entropy = wtr.flush()
+
+    def gray(hv):
+        sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
+            + bytes([1, 1, hv, 0])
+        return (
+            b"\xff\xd8"
+            + J._seg(0xDB, bytes([0]) + qz)
+            + J._seg(0xC0, sof)
+            + J._seg(0xC4, J._dht_body(0, 0, J._DC_BITS, J._DC_VALS))
+            + J._seg(0xC4, J._dht_body(1, 0, J._AC_BITS, J._AC_VALS))
+            + J._seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
+            + entropy
+            + b"\xff\xd9"
+        )
+
+    one = decode_jpeg(gray(0x11))["raster"]
+    assert (decode_jpeg(gray(0x22))["raster"] == one).all()
+
+
+# sha256 of every encoder's bytes on three fixed images (dims not
+# multiples of 8): a refactor of the codec must not move a single byte
+_ENCODER_SHA256 = {
+    ("seq444", "constant"): "f96b28fe6ee665f7f9f427b9d8d7926f9ba0600370ec60347170db6d76b17e76",
+    ("seq420", "constant"): "509d82063e1d50890c72e9b9ecc9eb18951edb52d99d954c5564926f260f6855",
+    ("seq444_rst2", "constant"): "65a151c0f0f6fdf5574ca5506248066c15d091d4ab70adca76e3cdd75ede25bc",
+    ("jpeg12", "constant"): "c9a5e05fb2fedeec30cd5686eaab594815b6a1a7a768b9423e00ce66a462e4e5",
+    ("progressive", "constant"): "d0eede77214a78d6974d6e4abea2d4c0886189b05e7d135d24c0d1ad98f5b20f",
+    ("lossless", "constant"): "b445081150e732d7da71d3e472e5ccffcc45c2534e4425413d426ce8191770ca",
+    ("seq444", "gradient"): "12e668aea298dcaf3a1fc3d5089418a4dcb52087bf3d1a99b8b6e64123688348",
+    ("seq420", "gradient"): "0181144b6eeea0efe8db1c163114e8ef0eb4bd04891d435436d0967846400c84",
+    ("seq444_rst2", "gradient"): "675a68bf8a96e9a8a6ccb8a9e7e12da806d388ba7c8de554f4fe53d613f720bd",
+    ("jpeg12", "gradient"): "ac4748e1ea87a760ae31a4b0be3b5436c362c3e51129ea24930fcd35f02b66ea",
+    ("progressive", "gradient"): "d1e22d70f2687677e5a467be63d362655e51ce55ec3b7e2139a071a8aec00e18",
+    ("lossless", "gradient"): "46cd20690c8153c8794777a745116fe172776a3386ec0ebf29021f1df28dcc75",
+    ("seq444", "noise"): "e5f124cde3c20200248b5b29336315f8bc1fb2240460c27d77e8ebf5bfb8d029",
+    ("seq420", "noise"): "0e6d60f8430fb691ef1483df17b178db4574ce7f9b0b556cf875c3c4f9093223",
+    ("seq444_rst2", "noise"): "ea2b88c5d59198b522d47b937609f89da15dcc154f2544793756d1e4b9a1de10",
+    ("jpeg12", "noise"): "631f5c631ad474f20bbc8d8dd3c7d5b70302da279556eafe77e25f2729d929a6",
+    ("progressive", "noise"): "c80c84b944e048d45432dc84bcbfc921cdbe6f3ccd5cc99fa579349526defd33",
+    ("lossless", "noise"): "991bb074be785adf19b6a8af36ab369aabf46d420763a5e1e0ed4e1c748279a0",
+}
+
+
+def test_jpeg_encoder_bytes_pinned():
+    from cdc_export_system_spark.multimodal.jpeg import encode_jpeg12
+    from cdc_export_system_spark.multimodal.jpeg_lossless import (
+        encode_jpeg_lossless,
+    )
+    from cdc_export_system_spark.multimodal.jpeg_progressive import (
+        encode_jpeg_progressive,
+    )
+
+    yy, xx = np.mgrid[0:13, 0:19]
+    images = {
+        "constant": np.full((11, 13, 3), (200, 30, 90), dtype=np.uint8),
+        "gradient": np.stack(
+            [(xx * 9) % 256, (yy * 13) % 256, (xx + yy) * 4 % 256], axis=-1
+        ).astype(np.uint8),
+        "noise": np.random.RandomState(11)
+        .randint(0, 256, (9, 21, 3))
+        .astype(np.uint8),
+    }
+    encoders = {
+        "seq444": lambda w, h, img: encode_jpeg(w, h, img.tobytes()),
+        "seq420": lambda w, h, img: encode_jpeg(w, h, img.tobytes(), "420"),
+        "seq444_rst2": lambda w, h, img: encode_jpeg(
+            w, h, img.tobytes(), restart_interval=2
+        ),
+        "jpeg12": lambda w, h, img: encode_jpeg12(
+            w, h, (img.astype("<u2") * 16 + img % 16).tobytes()
+        ),
+        "progressive": lambda w, h, img: encode_jpeg_progressive(
+            w, h, img.tobytes()
+        ),
+        "lossless": lambda w, h, img: encode_jpeg_lossless(w, h, img.tobytes()),
+    }
+    got = {
+        (enc, name): hashlib.sha256(f(img.shape[1], img.shape[0], img)).hexdigest()
+        for name, img in images.items()
+        for enc, f in encoders.items()
+    }
+    assert got == _ENCODER_SHA256

@@ -343,8 +343,8 @@ def test_jpeg12_constant_closed_form():
     """12-bit extended sequential (SOF1): decode(encode(constant)) must
     hit the center-2048 / q00-128 closed form bit-exactly — including
     the s % 16 == 8 floor-boundary colors the einsum DCT's epsilon
-    would flip without the exact-DC path (jpeg12.py)."""
-    from cdc_export_system_spark.multimodal.jpeg12 import (
+    would flip without the exact-DC path (jpeg._quantized_blocks)."""
+    from cdc_export_system_spark.multimodal.jpeg import (
         encode_jpeg12,
         jpeg12_constant_roundtrip,
     )
@@ -373,7 +373,7 @@ def test_jpeg12_gradient_roundtrip_and_errors():
     quant table (same relative scale as the 8-bit bound), the encoder
     is bit-deterministic, and out-of-range samples / SOF0-with-12-bit
     are rejected."""
-    from cdc_export_system_spark.multimodal.jpeg12 import encode_jpeg12
+    from cdc_export_system_spark.multimodal.jpeg import encode_jpeg12
 
     h, w = 33, 47
     yy, xx = np.mgrid[0:h, 0:w]
